@@ -2244,10 +2244,8 @@ object SparkEntry {
         TextAnalysis.purgeBm25Index(s, idxTable)
       }
       val probes = docs.filter(col("doc_id") < 60).select("doc_id")
-      val tombstones =
-        if (s.catalog.tableExists(idxTable + "_tombstones"))
-          s.table(idxTable + "_tombstones")
-        else probes.filter(lit(false)) // post-purge: dropped == empty
+      val tombstones = graft.plans.Tombstones.set(s, idxTable, "doc_id")
+        .getOrElse(probes.filter(lit(false))) // post-purge: dropped == empty
       graft.verify.Comparator.absenceAudit(probes, "doc_id", Seq(
         ("corpus", docs, "doc_id"),
         ("posting", s.table(idxTable)

@@ -1364,6 +1364,7 @@ object Dedup {
         Seq("index_id"))
         .select(minhashReservedCols(k).map(col) ++ carryCols.map(col): _*)
     graft.plans.ScaleJoins.writeBucketed(carried, tableName, "sig_0", buckets)
+    graft.plans.Tombstones.reset(docs.sparkSession, tableName)
   }
 
   /** Incremental signature-index maintenance: signature an accepted
@@ -1426,96 +1427,19 @@ object Dedup {
   }
 
   /** Operational telemetry for a materialized signature index — the
-    * text twin of [[Similarity.ivfIndexStats]].
-    *
-    * @param totalRows         signature rows in the index now
-    * @param distinctRows      distinct signature rows — every id is one
-    *                          row, so the difference is EXACTLY the
-    *                          replay residue [[appendToMinhashIndex]]'s
-    *                          at-least-once appends accumulate
-    * @param duplicateFraction (total − distinct) / total — wasted index
-    *                          bytes and duplicated emitted pairs; when
-    *                          it creeps up, compact with
-    *                          [[graft.plans.Compaction.compactBucketedTable]]
-    *                          (drops exactly these rows) or rebuild with
-    *                          [[writeMinhashIndex]] over the corpus
-    * @param maxBucketRows     hottest `sig_0` blocking value — the
-    *                          ceiling on a single bucket-join task; a
-    *                          degenerate shingle (boilerplate corpus)
-    *                          shows up here before it shows up as a
-    *                          slow query
-    * @param nBlockingKeys     distinct `sig_0` values — the number of
-    *                          blocking buckets mass is spread over
-    * @param bucketSkew        maxBucketRows / mean bucket size — the
-    *                          text twin of [[Similarity.IvfIndexStats]]
-    *                          `listSkew`. Text blocking keys run much
-    *                          sparser than IVF lists (mean near 1 row
-    *                          per distinct signature), so meaningful
-    *                          thresholds are far looser — see
-    *                          [[isStaleMinhashIndex]]
-    */
-  final case class MinhashIndexStats(
-      totalRows: Long,
-      distinctRows: Long,
-      duplicateFraction: Double,
-      maxBucketRows: Long,
-      nBlockingKeys: Long,
-      bucketSkew: Double,
-      // tombstoned ROWS still physically present / totalRows (row
-      // mass, not distinct ids — replay-duplicate rows of a deleted
-      // doc all count, the dhashIndexStats idiom) — disk and scan
-      // waste [[purgeMinhashIndex]] reclaims; collisions are already
-      // delete-exact regardless. Trailing default keeps older
-      // positional constructions valid.
-      tombstoneFraction: Double = 0.0)
-
-  /** Measure [[MinhashIndexStats]]: ONE pass over the index, grouped
-    * by `sig_0` — the table's bucket column, so the single shuffle can
-    * ride the bucket layout. Rows in different `sig_0` groups are
-    * distinct by construction, so the global distinct count is the sum
-    * of within-group distincts. Nothing collected beyond four scalars.
-    * Run between ingest epochs, same cadence as
-    * [[Similarity.ivfIndexStats]].
+    * text twin of [[Similarity.ivfIndexStats]], measured in ONE pass
+    * grouped by `sig_0`, the table's bucket column (see
+    * [[graft.plans.Tombstones.rowIndexStats]]). Run between ingest
+    * epochs; [[isStaleMinhashIndex]] reads it.
     */
   def minhashIndexStats(
       spark: org.apache.spark.sql.SparkSession,
-      tableName: String): MinhashIndexStats = {
-    val t = spark.table(tableName)
-    val r = t.groupBy("sig_0")
-      .agg(
-        count(lit(1)).as("n"),
-        count_distinct(struct(t.columns.map(col): _*)).as("d"))
-      .agg(sum(col("n")), sum(col("d")), max(col("n")), count(lit(1)))
-      .collect()(0)
-    // an EMPTY index aggregates to (null, null, null, 0) — sum/max over
-    // zero groups — and must report zeros, not NPE
-    val total = if (r.isNullAt(0)) 0L else r.getLong(0)
-    val distinctRows = if (r.isNullAt(1)) 0L else r.getLong(1)
-    val maxBucket = if (r.isNullAt(2)) 0L else r.getLong(2)
-    val nKeys = r.getLong(3)
-    val mean = if (nKeys == 0L) 0.0 else total.toDouble / nKeys
-    // dead counts tombstoned ROWS of the index (the dhashIndexStats
-    // idiom), not distinct tombstoned ids — under replay-duplicate
-    // residue the id-based count halves the reported dead mass and
-    // staleness stays quiet at double the intended threshold
-    val dead = minhashTombstones(spark, tableName) match {
-      case Some(ts) =>
-        t.join(broadcast(ts), Seq("index_id"), "left_semi").count()
-      case None => 0L
-    }
-    MinhashIndexStats(
-      total,
-      distinctRows,
-      if (total == 0L) 0.0 else (total - distinctRows).toDouble / total,
-      maxBucket,
-      nKeys,
-      if (mean == 0.0) 1.0 else maxBucket / mean,
-      if (total == 0L) 0.0 else dead.toDouble / total)
-  }
+      tableName: String): graft.plans.Tombstones.RowIndexStats =
+    graft.plans.Tombstones.rowIndexStats(spark, tableName, "index_id", Seq("sig_0"))
 
   /** The operational decision API over [[minhashIndexStats]] — parity
     * with [[Similarity.isStaleIvfSqIndex]], with remediation split by
-    * which signal fired (the two degrade differently):
+    * which signal fired (the three degrade differently):
     *
     *  - `duplicateFraction > maxDuplicateFraction`: replay residue from
     *    [[appendToMinhashIndex]]'s at-least-once appends has piled up —
@@ -1531,6 +1455,9 @@ object Dedup {
     *    dedup the corpus (e.g. [[exact]]) and rebuild via
     *    [[writeMinhashIndex]] — or accept the documented fail-open
     *    `maxBucket` cap at query time.
+    *  - `tombstoneFraction > maxTombstoneFraction`: collisions stay
+    *    exact under tombstones; what degrades is bytes scanned and
+    *    stored — run [[purgeMinhashIndex]].
     *
     * Text blocking keys are sparse (mean bucket ≈ 1 row), so the skew
     * default is far looser than the IVF's 4×: a bucket only flags when
@@ -1542,36 +1469,18 @@ object Dedup {
       tableName: String,
       maxDuplicateFraction: Double = 0.25,
       maxBucketSkew: Double = 64.0,
-      maxTombstoneFraction: Double = 0.2): Boolean = {
-    val s = minhashIndexStats(spark, tableName)
-    s.duplicateFraction > maxDuplicateFraction || s.bucketSkew > maxBucketSkew ||
-      // collisions stay exact under tombstones; what degrades is bytes
-      // scanned and stored — past the threshold, run purgeMinhashIndex
-      s.tombstoneFraction > maxTombstoneFraction
-  }
-
-  /** The distinct tombstoned ids of a signature index, if any were
-    * ever written — a missing table means no deletions, which is also
-    * exactly the post-[[purgeMinhashIndex]] state.
-    */
-  private def minhashTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      tableName: String): Option[DataFrame] =
-    if (spark.catalog.tableExists(tableName + "_tombstones"))
-      Some(spark.table(tableName + "_tombstones").select("index_id").distinct())
-    else None
+      maxTombstoneFraction: Double = 0.2): Boolean =
+    minhashIndexStats(spark, tableName)
+      .isStale(maxDuplicateFraction, maxBucketSkew, maxTombstoneFraction)
 
   /** Delete documents from a materialized signature index — the
-    * takedown / PII-purge verb, O(|ids|) however large the index: ids
-    * land in `<table>_tombstones` and
-    * [[portableMinhashPairsAgainstIndex]] anti-joins the history side
-    * against them (BEFORE the hot-bucket cap, exactly as a rebuilt
-    * index would apply it), so a deleted document can never collide
-    * with an arriving batch again. Collision output after a delete is
-    * identical to an index rebuilt without those docs — signatures
-    * are per-row, nothing corpus-wide moves. Physical removal is
-    * [[purgeMinhashIndex]]; unknown ids tombstone harmlessly;
-    * re-deletes are idempotent.
+    * takedown / PII-purge verb, O(|ids|) however large the index:
+    * [[portableMinhashPairsAgainstIndex]] drops the deleted ids from
+    * the history side BEFORE the hot-bucket cap, exactly as a rebuilt
+    * index would, so collision output after a delete is identical to
+    * an index rebuilt without those docs — signatures are per-row,
+    * nothing corpus-wide moves. The protocol, physical removal
+    * included, is [[graft.plans.Tombstones]].
     *
     * @param ids one-column frame of document ids to remove
     * @return distinct NEW ids actually removed — the takedown receipt
@@ -1579,54 +1488,20 @@ object Dedup {
   def deleteFromMinhashIndex(
       spark: org.apache.spark.sql.SparkSession,
       tableName: String,
-      ids: DataFrame): Long = {
-    require(ids.columns.length == 1, "ids must be a one-column frame of ids")
-    val idType = spark.table(tableName).schema("index_id").dataType
-    val ts = ids.select(col(ids.columns.head).cast(idType).as("index_id"))
-      .filter(col("index_id").isNotNull).distinct()
-    val live = minhashTombstones(spark, tableName) match {
-      case Some(t) => spark.table(tableName)
-        .join(broadcast(t), Seq("index_id"), "left_anti")
-      case None => spark.table(tableName)
-    }
-    val known = ts.join(live.select("index_id"), Seq("index_id"), "left_semi")
-      .localCheckpoint(true)
-    val n = known.count()
-    known.write.mode("append").format("parquet")
-      .saveAsTable(tableName + "_tombstones")
-    spark.catalog.refreshTable(tableName + "_tombstones")
-    n
-  }
+      ids: DataFrame): Long =
+    graft.plans.Tombstones.delete(spark, tableName, "index_id", ids, spark.table(tableName))
 
-  /** Make signature-index deletions physical: rewrite the signature
-    * rows without the tombstoned ids (riding
-    * [[graft.plans.Compaction.rewriteBucketedTable]]'s staged swap,
-    * tag `purge`; the rewrite's distinct also drops replay residue),
-    * then drop the tombstone table. Crash safety by ordering — the
-    * tombstone drop comes last, anti-joining already-purged rows is a
-    * no-op, and a missing tombstone table IS the purged state; every
-    * intermediate crash state reads like the final one, and re-running
-    * completes the purge. The stored shingle-width stamp survives the
-    * rewrite (column metadata rides the bucket spec), so appends still
-    * validate afterwards.
+  /** Make signature-index deletions physical — the crash-ordered purge
+    * of [[graft.plans.Tombstones]]. The stored shingle-width stamp
+    * survives the rewrite (column metadata rides the bucket spec), so
+    * appends still validate afterwards.
     *
     * @return (rowsBefore, rowsAfter)
     */
   def purgeMinhashIndex(
       spark: org.apache.spark.sql.SparkSession,
       tableName: String): (Long, Long) =
-    minhashTombstones(spark, tableName) match {
-      case None =>
-        val n = spark.table(tableName).count()
-        (n, n)
-      case Some(ts) =>
-        val pinned = ts.localCheckpoint(true) // survive the drop below
-        val counts = graft.plans.Compaction.rewriteBucketedTable(
-          spark, tableName, tag = "purge")(
-          _.join(broadcast(pinned), Seq("index_id"), "left_anti"))
-        spark.sql(s"DROP TABLE IF EXISTS `${tableName}_tombstones`")
-        counts
-    }
+    graft.plans.Tombstones.purge(spark, tableName, "index_id", Nil)
 
   /** Incremental near-dup against a MATERIALIZED index
     * ([[writeMinhashIndex]]): identical output contract to
@@ -1734,10 +1609,7 @@ object Dedup {
     // tombstones excluded BEFORE the hot-bucket cap: the cap must see
     // the live rows only, exactly as a rebuilt index would — and the
     // metadata restriction sits at the same level for the same reason
-    val live = minhashTombstones(spark, tableName) match {
-      case Some(ts) => restricted.join(broadcast(ts), Seq("index_id"), "left_anti")
-      case None => restricted
-    }
+    val live = graft.plans.Tombstones.live(spark, tableName, "index_id", restricted)
     val iSig = capBuckets(
       if (keys.length <= pruneKeys)
         live.filter(col("sig_0").isin(keys.map(_.getLong(0)).toIndexedSeq: _*))

@@ -1098,18 +1098,10 @@ object Multimodal {
       tableName: String,
       buckets: Int = 16,
       carryCols: Seq[String] = Nil
-  ): Unit = {
-    require(buckets > 0)
-    require(carryCols.forall(c => !Hash64ReservedCols.contains(c)),
-      s"carryCols collide with index columns: " +
-        carryCols.filter(Hash64ReservedCols.contains).mkString(", "))
-    graft.plans.ScaleJoins.writeBucketed(
-      withCarried(
-        dhashBandRows(
-          imageDHash(df, idCol, binCol).filter(col("dhash").isNotNull), idCol),
-        df, idCol, carryCols),
-      tableName, "bandval", buckets)
-  }
+  ): Unit =
+    writeHash64BandRows(df, idCol, tableName, buckets, carryCols,
+      dhashBandRows(
+        imageDHash(df, idCol, binCol).filter(col("dhash").isNotNull), idCol))
 
   /** Materialize an audio corpus's perceptual fingerprints as a
     * bucketed index table — the SIXTH persisted signature surface,
@@ -1129,19 +1121,11 @@ object Multimodal {
       buckets: Int = 16,
       canonicalRate: Int = 8000,
       carryCols: Seq[String] = Nil
-  ): Unit = {
-    require(buckets > 0)
-    require(carryCols.forall(c => !Hash64ReservedCols.contains(c)),
-      s"carryCols collide with index columns: " +
-        carryCols.filter(Hash64ReservedCols.contains).mkString(", "))
-    graft.plans.ScaleJoins.writeBucketed(
-      withCarried(
-        dhashBandRows(
-          audioFingerprint(df, idCol, binCol, canonicalRate)
-            .filter(col("afp").isNotNull), idCol, "afp"),
-        df, idCol, carryCols),
-      tableName, "bandval", buckets)
-  }
+  ): Unit =
+    writeHash64BandRows(df, idCol, tableName, buckets, carryCols,
+      dhashBandRows(
+        audioFingerprint(df, idCol, binCol, canonicalRate)
+          .filter(col("afp").isNotNull), idCol, "afp"))
 
   /** Materialize a video corpus's majority fingerprints as a bucketed
     * index table — the SEVENTH persisted signature surface, riding the
@@ -1160,18 +1144,26 @@ object Multimodal {
       buckets: Int = 16,
       maxFrames: Int = 8,
       carryCols: Seq[String] = Nil
-  ): Unit = {
+  ): Unit =
+    writeHash64BandRows(df, idCol, tableName, buckets, carryCols,
+      dhashBandRows(
+        videoFingerprint(df, idCol, binCol, maxFrames)
+          .filter(col("vfp").isNotNull), idCol, "vfp"))
+
+  /** The shared build tail of the 64-bit signature index family: guard
+    * the carried columns, write the band rows bucketed on `bandval`,
+    * and forget the previous build's tombstones.
+    */
+  private def writeHash64BandRows(
+      df: DataFrame, idCol: String, tableName: String, buckets: Int,
+      carryCols: Seq[String], rows: DataFrame): Unit = {
     require(buckets > 0)
     require(carryCols.forall(c => !Hash64ReservedCols.contains(c)),
       s"carryCols collide with index columns: " +
         carryCols.filter(Hash64ReservedCols.contains).mkString(", "))
     graft.plans.ScaleJoins.writeBucketed(
-      withCarried(
-        dhashBandRows(
-          videoFingerprint(df, idCol, binCol, maxFrames)
-            .filter(col("vfp").isNotNull), idCol, "vfp"),
-        df, idCol, carryCols),
-      tableName, "bandval", buckets)
+      withCarried(rows, df, idCol, carryCols), tableName, "bandval", buckets)
+    graft.plans.Tombstones.reset(df.sparkSession, tableName)
   }
 
   /** Incremental index maintenance: signature an accepted image batch
@@ -1251,16 +1243,6 @@ object Multimodal {
       .saveAsTable(tableName)
     spark.catalog.refreshTable(tableName)
   }
-
-  /** The distinct tombstoned ids of a dHash index, if any were ever
-    * written — a missing table means no deletions, which is also the
-    * post-[[purgeDHashIndex]] state.
-    */
-  private def dhashTombstones(
-      spark: SparkSession, tableName: String): Option[DataFrame] =
-    if (spark.catalog.tableExists(tableName + "_tombstones"))
-      Some(spark.table(tableName + "_tombstones").select("index_id").distinct())
-    else None
 
   /** Image near-dup collisions of a batch AGAINST the materialized
     * index: identical verify semantics to [[imageNearDupPairs]]
@@ -1463,10 +1445,7 @@ object Multimodal {
       probeRows,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keys = bSig.select("bandval").distinct().limit(pruneKeys + 1).collect()
-    val live = dhashTombstones(spark, tableName) match {
-      case Some(ts) => restricted.join(broadcast(ts), Seq("index_id"), "left_anti")
-      case None => restricted
-    }
+    val live = graft.plans.Tombstones.live(spark, tableName, "index_id", restricted)
     val iSig = Dedup.capBuckets(
       if (keys.length <= pruneKeys)
         live.filter(col("bandval").isin(keys.map(_.getLong(0)).toIndexedSeq: _*))
@@ -1480,112 +1459,44 @@ object Multimodal {
       .dropDuplicates("batch_id", "index_id")
   }
 
-  /** Delete images from the materialized dHash index — the takedown /
-    * PII-purge verb, O(|ids|) however large the index: ids land in
-    * `<table>_tombstones` and [[imagePairsAgainstIndex]] anti-joins the
-    * history side against them before the hot-bucket cap, so a deleted
-    * image can never collide with an arriving batch again — collision
-    * output after a delete is identical to an index REBUILT without
-    * those images (the delete == rebuild contract shared by all the
-    * index families). Unknown ids tombstone harmlessly; re-deletes are
-    * idempotent.
+  /** Delete images (or audio / video clips — the shared layout) from a
+    * materialized dHash index — the takedown / PII-purge verb, O(|ids|)
+    * however large the index: [[imagePairsAgainstIndex]] drops the
+    * deleted ids from the history side before the hot-bucket cap, so
+    * collision output after a delete is identical to an index REBUILT
+    * without those images. The protocol, physical removal included, is
+    * [[graft.plans.Tombstones]].
     *
     * @return distinct NEW ids actually removed — the takedown receipt
     */
   def deleteFromDHashIndex(
       spark: SparkSession,
       tableName: String,
-      ids: DataFrame): Long = {
-    require(ids.columns.length == 1, "ids must be a one-column frame of ids")
-    val idType = spark.table(tableName).schema("index_id").dataType
-    val ts = ids.select(col(ids.columns.head).cast(idType).as("index_id"))
-      .filter(col("index_id").isNotNull).distinct()
-    val live = dhashTombstones(spark, tableName) match {
-      case Some(t) => spark.table(tableName)
-        .join(broadcast(t), Seq("index_id"), "left_anti")
-      case None => spark.table(tableName)
-    }
-    val known = ts.join(live.select("index_id"), Seq("index_id"), "left_semi")
-      .localCheckpoint(true)
-    val n = known.count()
-    known.write.mode("append").format("parquet")
-      .saveAsTable(tableName + "_tombstones")
-    spark.catalog.refreshTable(tableName + "_tombstones")
-    n
-  }
+      ids: DataFrame): Long =
+    graft.plans.Tombstones.delete(spark, tableName, "index_id", ids, spark.table(tableName))
 
-  /** Make dHash-index deletions physical: rewrite the band rows without
-    * the tombstoned ids (riding
-    * [[graft.plans.Compaction.rewriteBucketedTable]]'s staged swap, tag
-    * `purge`; the rewrite's distinct also drops replay residue), then
-    * drop the tombstone table. Crash safety by ordering — a death after
-    * any step leaves the tombstone set intact and every intermediate
-    * state reads exactly like the final one; re-running completes the
-    * purge.
+  /** Make dHash-index deletions physical — the crash-ordered purge of
+    * [[graft.plans.Tombstones]].
     *
     * @return (bandRowsBefore, bandRowsAfter)
     */
   def purgeDHashIndex(
       spark: SparkSession,
       tableName: String): (Long, Long) =
-    dhashTombstones(spark, tableName) match {
-      case None =>
-        val n = spark.table(tableName).count()
-        (n, n)
-      case Some(ts) =>
-        val pinned = ts.localCheckpoint(true) // survive the drop below
-        val counts = graft.plans.Compaction.rewriteBucketedTable(
-          spark, tableName, tag = "purge")(
-          _.join(broadcast(pinned), Seq("index_id"), "left_anti"))
-        spark.sql(s"DROP TABLE IF EXISTS `${tableName}_tombstones`")
-        counts
-    }
+    graft.plans.Tombstones.purge(spark, tableName, "index_id", Nil)
 
   /** Operational telemetry for a dHash index — the image twin of
     * [[Dedup.minhashIndexStats]], measured in ONE pass grouped by the
-    * table's own bucket column. `duplicateFraction` is replay residue
+    * table's own bucket columns. `duplicateFraction` is replay residue
     * (compact to drop), `maxBucketRows`/`bucketSkew` surface a
     * degenerate image cluster (mono-color thumbnails) before it
     * surfaces as a slow query, `tombstoneFraction` is disk the next
     * [[purgeDHashIndex]] reclaims.
     */
-  final case class DHashIndexStats(
-      totalRows: Long,
-      distinctRows: Long,
-      duplicateFraction: Double,
-      maxBucketRows: Long,
-      nBlockingKeys: Long,
-      bucketSkew: Double,
-      tombstoneFraction: Double)
-
   def dhashIndexStats(
       spark: SparkSession,
-      tableName: String): DHashIndexStats = {
-    val t = spark.table(tableName)
-    val r = t.groupBy("band", "bandval")
-      .agg(
-        count(lit(1)).as("n"),
-        count_distinct(struct(t.columns.map(col).toIndexedSeq: _*)).as("d"))
-      .agg(sum(col("n")), sum(col("d")), max(col("n")), count(lit(1)))
-      .collect()(0)
-    val total = if (r.isNullAt(0)) 0L else r.getLong(0)
-    val distinctRows = if (r.isNullAt(1)) 0L else r.getLong(1)
-    val maxBucket = if (r.isNullAt(2)) 0L else r.getLong(2)
-    val nKeys = r.getLong(3)
-    val mean = if (nKeys == 0L) 0.0 else total.toDouble / nKeys
-    val dead = dhashTombstones(spark, tableName) match {
-      case Some(ts) => t.join(broadcast(ts), Seq("index_id"), "left_semi").count()
-      case None => 0L
-    }
-    DHashIndexStats(
-      total,
-      distinctRows,
-      if (total == 0L) 0.0 else (total - distinctRows).toDouble / total,
-      maxBucket,
-      nKeys,
-      if (mean == 0.0) 1.0 else maxBucket / mean,
-      if (total == 0L) 0.0 else dead.toDouble / total)
-  }
+      tableName: String): graft.plans.Tombstones.RowIndexStats =
+    graft.plans.Tombstones.rowIndexStats(spark, tableName, "index_id", Seq("band", "bandval"))
 
   /** The operational decision API over [[dhashIndexStats]] — parity
     * with [[Dedup.isStaleMinhashIndex]]: duplicate residue compacts,
@@ -1598,11 +1509,9 @@ object Multimodal {
       tableName: String,
       maxDuplicateFraction: Double = 0.25,
       maxBucketSkew: Double = 64.0,
-      maxTombstoneFraction: Double = 0.2): Boolean = {
-    val s = dhashIndexStats(spark, tableName)
-    s.duplicateFraction > maxDuplicateFraction || s.bucketSkew > maxBucketSkew ||
-      s.tombstoneFraction > maxTombstoneFraction
-  }
+      maxTombstoneFraction: Double = 0.2): Boolean =
+    dhashIndexStats(spark, tableName)
+      .isStale(maxDuplicateFraction, maxBucketSkew, maxTombstoneFraction)
 
   /** REAL video frame sampling for AVI payloads: up to `n` evenly
     * spaced frames extracted from the container's `LIST movi`

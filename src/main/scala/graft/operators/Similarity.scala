@@ -1013,6 +1013,7 @@ object Similarity {
         scalarQuantize(col("__cv")).getField("codes").as("__cq") +:
         col("__cv") +: col("__cn") +: carryCols.map(col): _*)
     graft.plans.ScaleJoins.writeBucketed(index, tableName, "__list", buckets)
+    graft.plans.Tombstones.reset(corpus.sparkSession, tableName)
     // quantizer-training row count: for a fresh build, the just-written
     // table's count (a parquet count(*) is metadata-only); for a pinned
     // rebuild, the SOURCE's stamp carried forward — the denominator for
@@ -1165,12 +1166,8 @@ object Similarity {
       if (total == 0L) 0.0 else math.max(0L, total - built).toDouble / total
     val maxList = if (perList.isEmpty) 0L else perList.max
     val mean = if (nLists == 0) 0.0 else total.toDouble / nLists
-    val dead = ivfTombstones(spark, tableName) match {
-      case Some(ts) =>
-        ts.join(spark.table(tableName).select("neighbor_id"),
-          Seq("neighbor_id"), "left_semi").count()
-      case None => 0L
-    }
+    val dead = graft.plans.Tombstones.deadRows(
+      spark, tableName, "neighbor_id", spark.table(tableName))
     IvfIndexStats(total, built, appendedFraction, nLists, maxList,
       if (mean == 0.0) 1.0 else maxList / mean,
       if (total == 0L) 0.0 else dead.toDouble / total)
@@ -1210,52 +1207,26 @@ object Similarity {
       s.tombstoneFraction > maxTombstoneFraction
   }
 
-  /** The distinct tombstoned ids of an IVF index (SQ or PQ — shared
-    * layout), if any were ever written. A missing table means no
-    * deletions, which is also exactly the post-purge state — every
-    * crash point of [[purgeIvfSqIndex]] leaves reads correct.
-    */
-  private def ivfTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      tableName: String): Option[DataFrame] =
-    if (spark.catalog.tableExists(tableName + "_tombstones"))
-      Some(spark.table(tableName + "_tombstones").select("neighbor_id").distinct())
-    else None
-
-  /** The index's code rows restricted to live (non-tombstoned)
-    * vectors — what every query path's phase 1 must see, so a deleted
-    * vector can never reach a shortlist. The broadcast anti-join sits
-    * ABOVE the bucketed scan, so probed-list pruning and pushed
-    * metadata predicates are untouched.
+  /** The index's live (non-deleted) rows — what every query path's
+    * phase 1 must see, so a deleted vector can never reach a shortlist.
     */
   private def ivfLiveRows(
       spark: org.apache.spark.sql.SparkSession,
-      tableName: String): DataFrame = {
-    val t = spark.table(tableName)
-    ivfTombstones(spark, tableName) match {
-      case Some(ts) => t.join(broadcast(ts), Seq("neighbor_id"), "left_anti")
-      case None => t
-    }
-  }
+      tableName: String): DataFrame =
+    graft.plans.Tombstones.live(spark, tableName, "neighbor_id", spark.table(tableName))
 
-  /** Delete vectors from a materialized IVF-SQ index — the takedown /
-    * PII-purge verb, O(|ids|) however large the index: ids land in
-    * `<table>_tombstones` and every query path anti-joins its phase-1
-    * candidates against them, so a deleted vector can never appear in
-    * a shortlist or a result. Search after a delete returns exactly
-    * what an index REBUILT without those vectors (with the SAME
-    * quantizer — `pinQuantizerFrom`) returns: the quantizer never
-    * moves on delete, list membership of survivors is untouched, and
-    * ranking is per-row. (A fresh-quantizer rebuild re-samples
-    * centroids from the smaller corpus and may legitimately probe
-    * differently — that is drift repair, not deletion.)
-    *
-    * The vector's bytes stay on disk until [[purgeIvfSqIndex]] — a
-    * bucketed codes table cannot rewrite just "the deleted ids'
-    * lists" without knowing their vectors (id→list is id→vector),
-    * which only a full index scan recovers; the logical-delete /
-    * physical-purge split keeps the delete O(|ids|). Unknown ids
-    * tombstone harmlessly; re-deletes are idempotent.
+  /** Delete vectors from a materialized IVF index (SQ or PQ — shared
+    * layout) — the takedown / PII-purge verb, O(|ids|) however large
+    * the index: every query path drops the deleted ids from its phase-1
+    * candidates, so a deleted vector can never appear in a shortlist or
+    * a result. Search after a delete returns exactly what an index
+    * REBUILT without those vectors (with the SAME quantizer —
+    * `pinQuantizerFrom`) returns: the quantizer never moves on delete,
+    * list membership of survivors is untouched, and ranking is
+    * per-row. (A fresh-quantizer rebuild re-samples centroids from the
+    * smaller corpus and may legitimately probe differently — that is
+    * drift repair, not deletion.) The protocol, physical removal
+    * included, is [[graft.plans.Tombstones]].
     *
     * @param ids one-column frame of neighbor ids to remove
     * @return distinct NEW ids actually removed (already-tombstoned and
@@ -1264,71 +1235,20 @@ object Similarity {
   def deleteFromIvfSqIndex(
       spark: org.apache.spark.sql.SparkSession,
       tableName: String,
-      ids: DataFrame): Long = {
-    require(ids.columns.length == 1, "ids must be a one-column frame of ids")
-    val idType = spark.table(tableName).schema("neighbor_id").dataType
-    val ts = ids.select(col(ids.columns.head).cast(idType).as("neighbor_id"))
-      .filter(col("neighbor_id").isNotNull).distinct()
-    val known = ts.join(
-      ivfLiveRows(spark, tableName).select("neighbor_id"),
-      Seq("neighbor_id"), "left_semi")
-      .localCheckpoint(true)
-    val n = known.count()
-    known.write.mode("append").format("parquet")
-      .saveAsTable(tableName + "_tombstones")
-    spark.catalog.refreshTable(tableName + "_tombstones")
-    n
-  }
-
-  /** [[deleteFromIvfSqIndex]] for an IVF-PQ index — the two families
-    * share the `(neighbor_id, __list, …)` layout and the tombstone
-    * machinery verbatim.
-    */
-  def deleteFromIvfPqIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      tableName: String,
       ids: DataFrame): Long =
-    deleteFromIvfSqIndex(spark, tableName, ids)
+    graft.plans.Tombstones.delete(spark, tableName, "neighbor_id", ids, spark.table(tableName))
 
-  /** Make IVF deletions physical: rewrite the code rows without the
-    * tombstoned ids (riding
-    * [[graft.plans.Compaction.rewriteBucketedTable]]'s staged swap,
-    * tag `purge`), then drop the tombstone table. The centroid /
-    * codebook side tables are deliberately untouched — the quantizer
-    * is corpus-wide state that deletion must NOT move (that is the
-    * delete == rebuild contract). Crash safety by ordering: the
-    * tombstone drop comes last, anti-joining already-purged rows is a
-    * no-op, and a missing tombstone table IS the purged state — every
-    * intermediate crash state reads exactly like the final one, and
-    * re-running completes the purge. The rewrite also runs the
-    * standard distinct, so a purge doubles as replay-residue
-    * compaction.
+  /** Make IVF (SQ or PQ) deletions physical — the crash-ordered purge
+    * of [[graft.plans.Tombstones]]. The quantizer side tables stay
+    * untouched: deletion must NOT move it (the delete == rebuild
+    * contract).
     *
     * @return (rowsBefore, rowsAfter)
     */
   def purgeIvfSqIndex(
       spark: org.apache.spark.sql.SparkSession,
       tableName: String): (Long, Long) =
-    ivfTombstones(spark, tableName) match {
-      case None =>
-        val n = spark.table(tableName).count()
-        (n, n)
-      case Some(ts) =>
-        val pinned = ts.localCheckpoint(true) // survive the drop below
-        val counts = graft.plans.Compaction.rewriteBucketedTable(
-          spark, tableName, tag = "purge")(
-          _.join(broadcast(pinned), Seq("neighbor_id"), "left_anti"))
-        spark.sql(s"DROP TABLE IF EXISTS `${tableName}_tombstones`")
-        counts
-    }
-
-  /** [[purgeIvfSqIndex]] for an IVF-PQ index — shared layout, shared
-    * machinery.
-    */
-  def purgeIvfPqIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      tableName: String): (Long, Long) =
-    purgeIvfSqIndex(spark, tableName)
+    graft.plans.Tombstones.purge(spark, tableName, "neighbor_id", Nil)
 
   /** Query a materialized IVF-SQ index ([[writeIvfSqIndex]]): the
     * shared [[ivfSqSearch]] kernel with every corpus-side input read
@@ -1743,6 +1663,7 @@ object Similarity {
       col("__cv"), col("__cn"))
     graft.plans.ScaleJoins.writeBucketed(index, tableName, "__list", buckets)
     val spark = corpus.sparkSession
+    graft.plans.Tombstones.reset(spark, tableName)
     spark.range(1)
       .select(posexplode(centArr).as(Seq("cpos", "__c")))
       .select(col("cpos").cast("long").as("cpos"), col("__c._1").as("cid"),

@@ -904,13 +904,9 @@ object TextAnalysis {
     */
   private def cosineLiveNorms(
       spark: org.apache.spark.sql.SparkSession,
-      tableName: String): DataFrame = {
-    val base = spark.table(tableName + "_norms").distinct()
-    bm25Tombstones(spark, tableName) match {
-      case Some(ts) => base.join(broadcast(ts), Seq("doc_id"), "left_anti")
-      case None => base
-    }
-  }
+      tableName: String): DataFrame =
+    graft.plans.Tombstones.live(spark, tableName, "doc_id",
+      spark.table(tableName + "_norms").distinct())
 
   /** Materialize (or re-derive) the cosine norms sidecar of a BM25
     * index: `<table>_norms` (doc_id, nrm) holds every roster doc's
@@ -1344,7 +1340,7 @@ object TextAnalysis {
     bm25Docs(df, idCol, textCol).select(col("doc_id"), col("dl"))
       .write.mode("overwrite").format("parquet")
       .saveAsTable(tableName + "_docs")
-    spark.sql(s"DROP TABLE IF EXISTS `${tableName}_tombstones`")
+    graft.plans.Tombstones.reset(spark, tableName)
     // a rebuild re-creates the world: a cosine norms sidecar from the
     // previous build would be stale against the new snapshot — drop it
     // (re-enable explicitly via refreshCosineNorms)
@@ -1355,41 +1351,27 @@ object TextAnalysis {
     writeBm25Stats(spark, tableName, n, s, n, s, normForm)
   }
 
-  /** The live document roster of a BM25 index: distinct `(doc_id, dl)`
-    * rows of `<table>_docs` (replayed epochs land byte-identical rows;
-    * distinct collapses them) minus tombstoned ids — the frame every
-    * (n_docs, sum_dl) aggregate and every deletion-aware read derives
-    * from. Falls back to reconstructing from postings for a pre-roster
-    * index (zero-token legacy docs are invisible there — run
-    * [[repairBm25Index]] once to materialize the roster and get the
-    * build-time count reconciliation).
+  /** The document roster, deleted docs included: distinct `(doc_id,
+    * dl)` rows of `<table>_docs` (replayed epochs land byte-identical
+    * rows). A pre-roster index falls back to postings, where zero-token
+    * legacy docs are invisible — run [[repairBm25Index]] once.
+    */
+  private def bm25Roster(
+      spark: org.apache.spark.sql.SparkSession,
+      tableName: String): DataFrame =
+    if (spark.catalog.tableExists(tableName + "_docs"))
+      spark.table(tableName + "_docs").distinct()
+    else
+      spark.table(tableName)
+        .groupBy("doc_id").agg(max(col("dl")).as("dl"))
+
+  /** [[bm25Roster]] minus deleted docs — the frame every (n_docs,
+    * sum_dl) aggregate and every deletion-aware read derives from.
     */
   private def bm25LiveDocs(
       spark: org.apache.spark.sql.SparkSession,
-      tableName: String): DataFrame = {
-    val base =
-      if (spark.catalog.tableExists(tableName + "_docs"))
-        spark.table(tableName + "_docs").distinct()
-      else
-        spark.table(tableName)
-          .groupBy("doc_id").agg(max(col("dl")).as("dl"))
-    bm25Tombstones(spark, tableName) match {
-      case Some(ts) => base.join(broadcast(ts), Seq("doc_id"), "left_anti")
-      case None => base
-    }
-  }
-
-  /** The distinct tombstoned ids of a BM25 index, if any were ever
-    * written. A missing table means no deletions — which is also
-    * exactly the post-[[purgeBm25Index]] state, so every crash point
-    * of the purge leaves reads correct.
-    */
-  private def bm25Tombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      tableName: String): Option[DataFrame] =
-    if (spark.catalog.tableExists(tableName + "_tombstones"))
-      Some(spark.table(tableName + "_tombstones").select("doc_id").distinct())
-    else None
+      tableName: String): DataFrame =
+    graft.plans.Tombstones.live(spark, tableName, "doc_id", bm25Roster(spark, tableName))
 
   /** One-row (n_docs, sum_dl) of the CURRENT corpus — aggregated live
     * from the roster (see [[bm25LiveDocs]]); `_stats`' stored values
@@ -1408,13 +1390,8 @@ object TextAnalysis {
     */
   private def bm25LivePostings(
       spark: org.apache.spark.sql.SparkSession,
-      tableName: String): DataFrame = {
-    val t = spark.table(tableName)
-    bm25Tombstones(spark, tableName) match {
-      case Some(ts) => t.join(broadcast(ts), Seq("doc_id"), "left_anti")
-      case None => t
-    }
-  }
+      tableName: String): DataFrame =
+    graft.plans.Tombstones.live(spark, tableName, "doc_id", spark.table(tableName))
 
   private def writeBm25Stats(
       spark: org.apache.spark.sql.SparkSession,
@@ -1698,94 +1675,38 @@ object TextAnalysis {
 
   /** Delete documents from a materialized BM25 index — the takedown /
     * PII-purge verb (license revocation, deduplication-driven removal,
-    * a compliance request), O(|ids|) however large the index:
-    * tombstone ids are appended to `<table>_tombstones` and every
-    * query path anti-joins against them, removing the documents from
-    * candidates, df, N, and avgdl in the same instant. Scoring after a
-    * delete is therefore bit-identical to an index REBUILT without
-    * those documents (the delete == rebuild contract, mirror of the
-    * append == rebuild one) — df was always live, and N/avgdl
-    * aggregate from the roster minus tombstones.
-    *
-    * The posting bytes stay on disk until [[purgeBm25Index]] — the
-    * standard logical-delete/physical-purge split (a bucketed postings
-    * table cannot rewrite just "the deleted doc's buckets": doc→bucket
-    * membership is doc→terms, which only a full postings scan knows,
-    * so eager physical deletion would cost O(index) per request).
-    * Unknown ids tombstone harmlessly (the anti-join matches nothing).
-    * Idempotent: re-deleting an id appends a duplicate tombstone row
-    * the distinct-on-read collapses.
+    * a compliance request), O(|ids|) however large the index: every
+    * query path drops the deleted documents from candidates, df, N and
+    * avgdl in the same instant. Scoring after a delete is therefore
+    * bit-identical to an index REBUILT without those documents (the
+    * delete == rebuild contract, mirror of the append == rebuild one) —
+    * df was always live, and N/avgdl aggregate from the live roster.
+    * The protocol, physical removal included, is
+    * [[graft.plans.Tombstones]].
     *
     * @param ids one-column frame of doc ids to remove
     * @return number of distinct NEW ids tombstoned (already-tombstoned
-    *         and unknown ids excluded) — the takedown receipt
+    *         ids and ids absent from the roster excluded) — the
+    *         takedown receipt
     */
   def deleteFromBm25Index(
       spark: org.apache.spark.sql.SparkSession,
       tableName: String,
-      ids: DataFrame): Long = {
-    require(ids.columns.length == 1, "ids must be a one-column frame of doc ids")
-    val docIdType = spark.table(tableName).schema("doc_id").dataType
-    val ts = ids.select(col(ids.columns.head).cast(docIdType).as("doc_id"))
-      .filter(col("doc_id").isNotNull).distinct()
-    // the receipt counts ids that are (a) new to the tombstone set and
-    // (b) actually in the roster — a takedown audit wants "how many
-    // documents did this remove", not "how many rows did I write"
-    val known = ts.join(
-      bm25LiveDocs(spark, tableName).select("doc_id"), Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
-    val n = known.count()
-    known.write.mode("append").format("parquet")
-      .saveAsTable(tableName + "_tombstones")
-    spark.catalog.refreshTable(tableName + "_tombstones")
-    n
-  }
+      ids: DataFrame): Long =
+    graft.plans.Tombstones.delete(spark, tableName, "doc_id", ids,
+      bm25Roster(spark, tableName))
 
-  /** Make BM25 deletions physical: rewrite the postings and the roster
-    * without the tombstoned documents, then drop the tombstone table.
-    * Answers never change across the purge (reads already excluded
-    * tombstoned docs); what changes is the disk — the deleted bytes
-    * are gone, which is what a compliance purge actually requires.
-    *
-    * Crash safety by ORDERING, not by a transaction: (1) postings
-    * rewrite rides [[graft.plans.Compaction.rewriteBucketedTable]]'s
-    * staged swap (tag `purge`); (2) roster rewrite rides
-    * [[graft.plans.Compaction.rewriteTable]]'s; (3) only THEN is the
-    * tombstone table dropped. A death after any step leaves the
-    * tombstone set intact, and anti-joining an already-purged table is
-    * a no-op — every intermediate state reads exactly like the final
-    * one. A missing tombstone table IS the "nothing deleted" state,
-    * so the final drop needs no staging. Re-running completes the
-    * purge. (The rewrites also run the standard distinct, so a purge
-    * doubles as a compaction pass.)
+  /** Make BM25 deletions physical — the crash-ordered purge of
+    * [[graft.plans.Tombstones]], sweeping the roster and the cosine norms
+    * sidecar too. Answers never change; the deleted bytes leave the
+    * disk, which is what a compliance purge requires.
     *
     * @return (postingRowsBefore, postingRowsAfter)
     */
   def purgeBm25Index(
       spark: org.apache.spark.sql.SparkSession,
-      tableName: String): (Long, Long) = {
-    bm25Tombstones(spark, tableName) match {
-      case None => // already purged (or never deleted): idempotent no-op
-        val n = spark.table(tableName).count()
-        (n, n)
-      case Some(ts) =>
-        val pinned = ts.localCheckpoint(true) // survive the table drop below
-        val counts = graft.plans.Compaction.rewriteBucketedTable(
-          spark, tableName, tag = "purge")(
-          _.join(broadcast(pinned), Seq("doc_id"), "left_anti"))
-        if (spark.catalog.tableExists(tableName + "_docs"))
-          graft.plans.Compaction.rewriteTable(spark, tableName + "_docs")(
-            _.distinct().join(broadcast(pinned), Seq("doc_id"), "left_anti"))
-        // the cosine norms sidecar is an index surface too: sweep the
-        // tombstoned docs' rows before the tombstones drop, same
-        // ordering argument as the roster
-        if (spark.catalog.tableExists(tableName + "_norms"))
-          graft.plans.Compaction.rewriteTable(spark, tableName + "_norms")(
-            _.distinct().join(broadcast(pinned), Seq("doc_id"), "left_anti"))
-        spark.sql(s"DROP TABLE IF EXISTS `${tableName}_tombstones`")
-        counts
-    }
-  }
+      tableName: String): (Long, Long) =
+    graft.plans.Tombstones.purge(spark, tableName, "doc_id", Seq("_docs", "_norms"))
 
   /** Reciprocal-rank fusion (Cormack/Clarke/Buettcher) of ranked
     * retrieval runs: each channel contributes `1/(k0 + rank)` per
@@ -1892,17 +1813,10 @@ object TextAnalysis {
     val cur = bm25CurrentStats(spark, tableName).head()
     val nDocs = cur.getAs[Long]("n_docs")
     val sumDl = cur.getAs[Long]("sum_dl")
-    // tombstone mass: distinct dead ids still physically present —
-    // the signal that a purge pass is due
-    val deadDocs = bm25Tombstones(spark, tableName) match {
-      case Some(ts) =>
-        val roster =
-          if (spark.catalog.tableExists(tableName + "_docs"))
-            spark.table(tableName + "_docs").select("doc_id").distinct()
-          else spark.table(tableName).select("doc_id").distinct()
-        ts.join(roster, Seq("doc_id"), "left_semi").count()
-      case None => 0L
-    }
+    // tombstone mass: dead docs still in the roster — the signal that
+    // a purge pass is due
+    val deadDocs = graft.plans.Tombstones.deadRows(spark, tableName, "doc_id",
+      bm25Roster(spark, tableName).select("doc_id").distinct())
     val appended =
       if (nDocs == 0L) 0.0 else math.max(0L, nDocs - bDocs).toDouble / nDocs
     val avgdl = if (nDocs == 0L) 0.0 else sumDl.toDouble / nDocs

@@ -414,7 +414,7 @@ object Compaction {
   /** Staged in-place rewrite of a BUCKETED catalog table — the
     * generalized machinery behind [[compactBucketedTable]] (transform
     * = identity) and the index families' tombstone purges
-    * ([[graft.operators.TextAnalysis.purgeBm25Index]] and kin), where
+    * ([[Tombstones.purge]]), where
     * transform = anti-join against the tombstone roster. The pipeline
     * is always `distinct().transform(...)` re-written through the
     * table's OWN bucket spec, so every caller gets replay-residue

@@ -40,12 +40,12 @@ class DeletionAuditSpec extends SparkSpec {
       === deadDocs.count())
     assert(Similarity.deleteFromIvfSqIndex(spark, "audit_sq", deadVecs)
       === deadVecs.count())
-    assert(Similarity.deleteFromIvfPqIndex(spark, "audit_pq", deadVecs)
+    assert(Similarity.deleteFromIvfSqIndex(spark, "audit_pq", deadVecs)
       === deadVecs.count())
     TextAnalysis.purgeBm25Index(spark, "audit_bm25")
     Dedup.purgeMinhashIndex(spark, "audit_mh")
     Similarity.purgeIvfSqIndex(spark, "audit_sq")
-    Similarity.purgeIvfPqIndex(spark, "audit_pq")
+    Similarity.purgeIvfSqIndex(spark, "audit_pq")
 
     // the audit: per deleted id, EVERY surface must count zero rows —
     // postings, roster, signatures, SQ codes, PQ codes — while a

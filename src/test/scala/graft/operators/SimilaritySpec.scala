@@ -924,6 +924,18 @@ class SimilaritySpec extends SparkSpec {
       "purge must not move the quantizer")
     assert(rows("ivfsq_del") === before)
     assert(Similarity.ivfIndexStats(spark, "ivfsq_del").tombstoneFraction === 0.0)
+    // tombstone mass counts dead ROWS: after one replayed append every
+    // deleted id holds two rows, and the fraction must say so
+    Similarity.writeIvfSqIndex(all, "vec_id", "embedding", "ivfsq_del_replay",
+      nCentroids = 8, buckets = 4)
+    Similarity.appendToIvfSqIndex(spark, "ivfsq_del_replay", all, "vec_id", "embedding")
+    val fifth = all.filter(col("vec_id") % 5 === 0).select("vec_id")
+    Similarity.deleteFromIvfSqIndex(spark, "ivfsq_del_replay", fifth)
+    val replayed = Similarity.ivfIndexStats(spark, "ivfsq_del_replay")
+    assert(replayed.tombstoneFraction === 2.0 * fifth.count() / replayed.totalRows,
+      replayed.toString)
+    assert(Similarity.isStaleIvfSqIndex(spark, "ivfsq_del_replay", maxAppendedFraction = 1.0,
+      maxListSkew = Double.MaxValue, maxTombstoneFraction = 0.15))
   }
 
   test("ivf delete: filtered search and knn-from-index forget tombstoned vectors too") {
@@ -951,14 +963,14 @@ class SimilaritySpec extends SparkSpec {
     Similarity.writeIvfPqIndex(emb, "vec_id", "embedding", "ivfpq_del",
       nCentroids = 4, m = 4, nCodes = 8, buckets = 2)
     val gone = emb.filter(col("vec_id") % 2 === 0).select("vec_id")
-    assert(Similarity.deleteFromIvfPqIndex(spark, "ivfpq_del", gone) === gone.count())
+    assert(Similarity.deleteFromIvfSqIndex(spark, "ivfpq_del", gone) === gone.count())
     val deadIds = gone.collect().map(_.getLong(0)).toSet
     def hits() = Similarity.ivfPqTopKFromIndex(spark, "ivfpq_del", q,
       "vec_id", "embedding", k = 10, nProbe = 4, shortlist = 100)
       .select("neighbor_id").collect().map(_.getLong(0)).toSet
     assert(hits().intersect(deadIds).isEmpty)
     val pre = hits()
-    val (b, a) = Similarity.purgeIvfPqIndex(spark, "ivfpq_del")
+    val (b, a) = Similarity.purgeIvfSqIndex(spark, "ivfpq_del")
     assert(b > a && hits() === pre, "purge is physical and answer-preserving")
     assert(spark.table("ivfpq_del_pqseeds").count() === 8,
       "purge must not move the codebook")
