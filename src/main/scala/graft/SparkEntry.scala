@@ -3181,16 +3181,17 @@ object SparkEntry {
         Takedown.enableVersioning(s, corpus, liveDir, "doc_id", reg)
         // v1 = the full pre-takedown corpus (history the sweep must reach)
         graft.plans.Compaction.compactParquet(s, liveDir)
-        Takedown.writeBm25Index(s, corpus, docs, "doc_id", "text", bmT,
-          buckets = 4, registryTable = reg)
+        // register first, then the family write (Takedown's contract)
+        Takedown.register(s, corpus, "bm25", bmT, registryTable = reg)
+        TextAnalysis.writeBm25Index(docs, "doc_id", "text", bmT, buckets = 4)
         TextAnalysis.refreshCosineNorms(s, bmT)
-        Takedown.writeMinhashIndex(s, corpus, docs, "doc_id", "text",
-          s"tkmh_$key", buckets = 4, registryTable = reg)
-        Takedown.writeIvfSqIndex(s, corpus,
+        Takedown.register(s, corpus, "minhash", s"tkmh_$key", registryTable = reg)
+        Dedup.writeMinhashIndex(docs, "doc_id", "text", s"tkmh_$key", buckets = 4)
+        Takedown.register(s, corpus, "ivfsq", s"tksq_$key", registryTable = reg)
+        Similarity.writeIvfSqIndex(
           t(s, dir, "embeddings").filter(col("vec_id") < 120)
             .select((col("vec_id") + off).as("doc_id"), col("embedding")),
-          "doc_id", "embedding", s"tksq_$key", nCentroids = 8, buckets = 4,
-          registryTable = reg)
+          "doc_id", "embedding", s"tksq_$key", nCentroids = 8, buckets = 4)
         // media for the perceptual families: one distinct payload per
         // id (even fixture indices — never the text-payload class).
         // Bounded collect: ≤ 120 ids drive the driver-side synthesis
@@ -3202,12 +3203,15 @@ object SparkEntry {
           .toDF("doc_id", "payload")
         val avis = (0 until nDocs).map(d => (d + off, dedupAvi(2 * d)))
           .toDF("doc_id", "payload")
-        Takedown.writeDHashIndex(s, corpus, imgs, "doc_id", "payload",
-          s"tkdh_$key", buckets = 4, registryTable = reg)
-        Takedown.writeAudioFingerprintIndex(s, corpus, wavs, "doc_id",
-          "payload", s"tkaf_$key", buckets = 4, registryTable = reg)
-        Takedown.writeVideoFingerprintIndex(s, corpus, avis, "doc_id",
-          "payload", s"tkvf_$key", buckets = 4, registryTable = reg)
+        Takedown.register(s, corpus, "dhash", s"tkdh_$key", registryTable = reg)
+        Multimodal.writeDHashIndex(imgs, "doc_id", "payload", s"tkdh_$key",
+          buckets = 4)
+        Takedown.register(s, corpus, "audio", s"tkaf_$key", registryTable = reg)
+        Multimodal.writeAudioFingerprintIndex(wavs, "doc_id", "payload",
+          s"tkaf_$key", buckets = 4)
+        Takedown.register(s, corpus, "video", s"tkvf_$key", registryTable = reg)
+        Multimodal.writeVideoFingerprintIndex(avis, "doc_id", "payload",
+          s"tkvf_$key", buckets = 4)
         Takedown.sweep(s, corpus, (col("doc_id") - off) % 7 === 0,
           registryTable = reg)
       }

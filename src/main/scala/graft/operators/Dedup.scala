@@ -1352,18 +1352,9 @@ object Dedup {
     val sig = portableMinhashSignatures(docs, idCol, textCol, n, k)
       .withColumnRenamed(idCol, "index_id")
       .withColumn("sig_0", col("sig_0").as("sig_0", meta))
-    val carried =
-      if (carryCols.isEmpty) sig
-      else sig.join(
-        // one metadata row per id: a duplicated id in `docs` must not
-        // multiply signature/band rows (that would skew the hot-bucket
-        // cap and break filtered == sub-corpus-rebuild equivalence —
-        // the uncarried path emits exactly one row per signature)
-        docs.select(col(idCol).as("index_id") +: carryCols.map(col): _*)
-          .dropDuplicates("index_id"),
-        Seq("index_id"))
-        .select(minhashReservedCols(k).map(col) ++ carryCols.map(col): _*)
-    graft.plans.ScaleJoins.writeBucketed(carried, tableName, "sig_0", buckets)
+    graft.plans.ScaleJoins.writeBucketed(
+      graft.plans.Compaction.withCarried(sig, docs, idCol, "index_id", carryCols),
+      tableName, "sig_0", buckets)
     graft.plans.Tombstones.reset(docs.sparkSession, tableName)
   }
 
@@ -1391,39 +1382,20 @@ object Dedup {
       normForm: String = NormForm.Default
   ): Unit = {
     val index = spark.table(tableName)
-    val carried = minhashCarriedCols(index, tableName, k)
+    minhashCarriedCols(index, tableName, k) // the signature-width check
     val storedMeta = index.schema("sig_0").metadata
     require(storedMeta.contains("graft_minhash_n") &&
       storedMeta.getLong("graft_minhash_n") == n.toLong,
       s"$tableName was built with a different shingle width than n=$n")
     NormForm.check(minhashNormForm(index), normForm, tableName)
-    val bucketSpec = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tableName))
-      .bucketSpec
-    require(bucketSpec.isDefined, s"$tableName is not a bucketed index table")
-    // the batch must supply every carried column (the BM25/IVF append
-    // rule) — checked with the session resolver, matching how col()
-    // resolves below
-    val resolver = spark.sessionState.analyzer.resolver
-    val missing = carried.filterNot(c => batch.columns.exists(resolver(_, c)))
-    require(missing.isEmpty,
-      s"batch lacks carried index columns: ${missing.mkString(", ")}")
+    val carried = graft.plans.Compaction.carriedColumns(
+      spark, tableName, minhashReservedCols(k), batch)
+    // the write's one-row-per-id projection: a duplicated batch id
+    // appends one signature row, exactly as a fresh write would
     val sig = portableMinhashSignatures(batch, idCol, textCol, n, k)
       .withColumnRenamed(idCol, "index_id")
-    val rows =
-      if (carried.isEmpty) sig
-      else sig.join(
-        batch.select(col(idCol).as("index_id") +: carried.map(col): _*),
-        Seq("index_id"))
-        .select(minhashReservedCols(k).map(col) ++ carried.map(col): _*)
-    rows
-      .write.mode("append").format("parquet")
-      .bucketBy(bucketSpec.get.numBuckets, "sig_0").sortBy("sig_0")
-      .saveAsTable(tableName)
-    // sessions that already resolved the table (a streaming micro-batch
-    // clone's parent, a long-lived reader) hold a cached file listing;
-    // refresh so the appended signatures are visible to the next query
-    spark.catalog.refreshTable(tableName)
+    graft.plans.Compaction.appendBucketed(spark, tableName,
+      graft.plans.Compaction.withCarried(sig, batch, idCol, "index_id", carried))
   }
 
   /** Operational telemetry for a materialized signature index — the

@@ -1061,24 +1061,6 @@ object Multimodal {
     index.columns.drop(Hash64ReservedCols.length).toSeq
   }
 
-  /** Attach carried metadata columns (from the source frame, keyed by
-    * id) to band rows — carried values repeat once per band (4×), the
-    * denormalization that lets the filtered probe's predicate reach
-    * the bucket-pruned scan with no join back to a doc table.
-    */
-  private def withCarried(
-      rows: DataFrame, src: DataFrame, idCol: String,
-      carryCols: Seq[String]): DataFrame =
-    if (carryCols.isEmpty) rows
-    else rows.join(
-      // one metadata row per id: a duplicated id in `src` must not
-      // multiply band rows (same guard as Dedup.writeMinhashIndex's
-      // carried projection)
-      src.select(col(idCol).as("index_id") +: carryCols.map(col): _*)
-        .dropDuplicates("index_id"),
-      Seq("index_id"))
-      .select((Hash64ReservedCols.toSeq ++ carryCols).map(col): _*)
-
   /** Materialize an image corpus's dHash signatures as a bucketed index
     * table — the image twin of [[Dedup.writeMinhashIndex]], and the
     * fifth persisted index family (MinHash, IVF-SQ, IVF-PQ, BM25,
@@ -1161,8 +1143,12 @@ object Multimodal {
     require(carryCols.forall(c => !Hash64ReservedCols.contains(c)),
       s"carryCols collide with index columns: " +
         carryCols.filter(Hash64ReservedCols.contains).mkString(", "))
+    // carried values repeat once per band (4×): the denormalization
+    // that lets the filtered probe's predicate reach the bucket-pruned
+    // scan with no join back to a doc table
     graft.plans.ScaleJoins.writeBucketed(
-      withCarried(rows, df, idCol, carryCols), tableName, "bandval", buckets)
+      graft.plans.Compaction.withCarried(rows, df, idCol, "index_id", carryCols),
+      tableName, "bandval", buckets)
     graft.plans.Tombstones.reset(df.sparkSession, tableName)
   }
 
@@ -1219,29 +1205,18 @@ object Multimodal {
           .filter(col("vfp").isNotNull), idCol, "vfp"))
 
   /** The shared append tail of the 64-bit signature index family:
-    * schema-validate, discover carried metadata from the stored schema
-    * (the batch must supply every carried column — the BM25/IVF/MinHash
-    * append rule, session-resolver checked), append through the
-    * table's own bucket spec, refresh cached listings.
+    * schema-validate, then append the band rows with the batch's
+    * carried metadata (the batch must supply every carried column)
+    * through [[graft.plans.Compaction.appendBucketed]].
     */
   private def appendHash64BandRows(
       spark: SparkSession, tableName: String, batch: DataFrame,
       idCol: String, rows: DataFrame): Unit = {
-    val index = spark.table(tableName)
-    val carried = hash64CarriedCols(index, tableName)
-    val resolver = spark.sessionState.analyzer.resolver
-    val missing = carried.filterNot(c => batch.columns.exists(resolver(_, c)))
-    require(missing.isEmpty,
-      s"batch lacks carried index columns: ${missing.mkString(", ")}")
-    val bucketSpec = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tableName))
-      .bucketSpec
-    require(bucketSpec.isDefined, s"$tableName is not a bucketed index table")
-    withCarried(rows, batch, idCol, carried)
-      .write.mode("append").format("parquet")
-      .bucketBy(bucketSpec.get.numBuckets, "bandval").sortBy("bandval")
-      .saveAsTable(tableName)
-    spark.catalog.refreshTable(tableName)
+    hash64CarriedCols(spark.table(tableName), tableName) // the layout check
+    val carried = graft.plans.Compaction.carriedColumns(
+      spark, tableName, Hash64ReservedCols.toSeq, batch)
+    graft.plans.Compaction.appendBucketed(spark, tableName,
+      graft.plans.Compaction.withCarried(rows, batch, idCol, "index_id", carried))
   }
 
   /** Image near-dup collisions of a batch AGAINST the materialized

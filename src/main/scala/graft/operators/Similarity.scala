@@ -1077,37 +1077,17 @@ object Similarity {
       vecCol: String
   ): Unit = {
     val centArr = typedlit(loadCentroids(spark, tableName))
-    val bucketSpec = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tableName))
-      .bucketSpec
-    require(bucketSpec.isDefined, s"$tableName is not a bucketed index table")
-    // carried metadata columns are whatever the stored schema holds
-    // beyond the index's own five — the append must supply them under
-    // the same names, or the filtered-search payload would silently
-    // go null for every appended row. Presence is checked with the
-    // session's own resolver (case-insensitive by default), matching
-    // how the select below will actually resolve the columns
-    val carryCols = spark.table(tableName).schema.fieldNames.toSeq
-      .filterNot(IvfIndexReservedCols.contains)
-    val resolver = spark.sessionState.analyzer.resolver
-    val missing = carryCols.filterNot(c => batch.columns.exists(resolver(_, c)))
-    require(missing.isEmpty,
-      s"$tableName carries metadata columns the batch lacks: ${missing.mkString(", ")}")
+    val carryCols = graft.plans.Compaction.carriedColumns(
+      spark, tableName, IvfIndexReservedCols.toSeq, batch)
     val b = batch.select(
         col(idCol).as("neighbor_id") +: col(vecCol).as("__cv") +:
           carryCols.map(col): _*)
       .withColumn("__cn", VectorFunctions.norm(col("__cv")))
       .withColumn("__list", bestListId(centArr, col("__cv"), col("__cn")))
-    b.select(
-        col("neighbor_id") +: col("__list") +:
-          scalarQuantize(col("__cv")).getField("codes").as("__cq") +:
-          col("__cv") +: col("__cn") +: carryCols.map(col): _*)
-      .write.mode("append").format("parquet")
-      .bucketBy(bucketSpec.get.numBuckets, "__list").sortBy("__list")
-      .saveAsTable(tableName)
-    // sessions that already resolved the table hold a cached file
-    // listing; refresh so the appended rows are visible to later reads
-    spark.catalog.refreshTable(tableName)
+    graft.plans.Compaction.appendBucketed(spark, tableName, b.select(
+      col("neighbor_id") +: col("__list") +:
+        scalarQuantize(col("__cv")).getField("codes").as("__cq") +:
+        col("__cv") +: col("__cn") +: carryCols.map(col): _*))
   }
 
   /** Staleness telemetry for a materialized IVF-SQ index.
@@ -1707,22 +1687,15 @@ object Similarity {
     val dim = seeds.head.length
     require(dim % m == 0, s"stored dim $dim not divisible by stored m $m")
     val sub = dim / m
-    val bucketSpec = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tableName))
-      .bucketSpec
-    require(bucketSpec.isDefined, s"$tableName is not a bucketed index table")
     val b = batch.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
       .withColumn("__cn", VectorFunctions.norm(col("__cv")))
       .withColumn("__list", bestListId(centArr, col("__cv"), col("__cn")))
-    b.select(col("neighbor_id"), col("__list"),
-        array((0 until m).map(j =>
-          pqCode(col("__cv").cast("array<double>"), seeds, j, sub)): _*)
-          .as("__pq"),
-        col("__cv"), col("__cn"))
-      .write.mode("append").format("parquet")
-      .bucketBy(bucketSpec.get.numBuckets, "__list").sortBy("__list")
-      .saveAsTable(tableName)
-    spark.catalog.refreshTable(tableName)
+    graft.plans.Compaction.appendBucketed(spark, tableName, b.select(
+      col("neighbor_id"), col("__list"),
+      array((0 until m).map(j =>
+        pqCode(col("__cv").cast("array<double>"), seeds, j, sub)): _*)
+        .as("__pq"),
+      col("__cv"), col("__cn")))
   }
 
   /** Query a materialized IVF-PQ index ([[writeIvfPqIndex]]): the

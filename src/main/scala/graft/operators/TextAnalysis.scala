@@ -1522,25 +1522,9 @@ object TextAnalysis {
       textCol: String,
       normForm: String = NormForm.Default
   ): Unit = {
-    val bucketSpec = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tableName))
-      .bucketSpec
-    require(bucketSpec.isDefined, s"$tableName is not a bucketed index table")
     NormForm.check(bm25NormForm(spark, tableName), normForm, tableName)
-    // batch stats observed on the append write itself — one tokenize
-    // pass per epoch, same as the build path
-    // discover carried metadata from the STORED schema — the batch must
-    // supply every carried column (the IVF append's discovery rule)
-    // presence checked with the session's own resolver
-    // (case-insensitive by default), matching how col() will actually
-    // resolve below — the appendToIvfSqIndex rule; a batch supplying
-    // 'Lang' for stored 'lang' must not be spuriously rejected
-    val carried = spark.table(tableName).columns.toSeq
-      .filterNot(Bm25IndexReservedCols)
-    val resolver = spark.sessionState.analyzer.resolver
-    val missing = carried.filterNot(c => batch.columns.exists(resolver(_, c)))
-    require(missing.isEmpty,
-      s"batch lacks carried index columns: ${missing.mkString(", ")}")
+    val carried = graft.plans.Compaction.carriedColumns(
+      spark, tableName, Bm25IndexReservedCols.toSeq, batch)
     require(spark.catalog.tableExists(tableName + "_docs"),
       s"$tableName has no ${tableName}_docs roster (pre-roster index) — " +
         "run repairBm25Index once to materialize it before appending")
@@ -1551,17 +1535,14 @@ object TextAnalysis {
     val nSnap = if (maintainNorms) requireFreshCosineNorms(spark, tableName) else 0L
     val docs = bm25Docs(batch, idCol, textCol, carried)
     val tf = bm25Tf(docs, carried)
-    tf.select(("term" +: "doc_id" +: "tf" +: "dl" +: carried).map(col): _*)
-      .write.mode("append").format("parquet")
-      .bucketBy(bucketSpec.get.numBuckets, "term").sortBy("term")
-      .saveAsTable(tableName)
+    graft.plans.Compaction.appendBucketed(spark, tableName,
+      tf.select(("term" +: "doc_id" +: "tf" +: "dl" +: carried).map(col): _*))
     // roster rows SECOND: a death in between is the repairable /
     // replay-healable window documented above (postings-first means the
     // backfill repair can always reconstruct tokenful docs)
     docs.select(col("doc_id"), col("dl"))
       .write.mode("append").format("parquet")
       .saveAsTable(tableName + "_docs")
-    spark.catalog.refreshTable(tableName)
     spark.catalog.refreshTable(tableName + "_docs")
     if (maintainNorms) {
       // norms LAST, under the SAME stored snapshot — appended docs are

@@ -57,18 +57,24 @@ object Compaction {
       df.coalesce(parts)
     else df.repartition(parts)
 
-  /** One recursive sweep: (data-file count, data-file bytes), both
-    * excluding `_`-prefixed bookkeeping files (`_SUCCESS`, metadata).
+  /** One recursive sweep: (data-file count, data-file bytes) under
+    * `path`, skipping every file with a `_`-prefixed name or a
+    * `_`-prefixed directory between it and `path` — the bookkeeping
+    * (`_SUCCESS`, `_zorder_meta/`, `_version_info/`) Spark's own reader
+    * ignores, so the numbers size exactly the data a rewrite reads.
     */
-  private def listData(
+  private[graft] def listData(
       fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path): (Long, Long) = {
+    val rootDepth = fs.makeQualified(path).depth()
+    def bookkeeping(p: org.apache.hadoop.fs.Path): Boolean =
+      p.depth() > rootDepth && (p.getName.startsWith("_") || bookkeeping(p.getParent))
     val it = fs.listFiles(path, true)
     var files = 0L
     var bytes = 0L
     while (it.hasNext) {
       val f = it.next()
-      if (f.isFile && !f.getPath.getName.startsWith("_")) {
+      if (f.isFile && !bookkeeping(f.getPath)) {
         files += 1; bytes += f.getLen
       }
     }
@@ -433,8 +439,6 @@ object Compaction {
       tag: String = "compact"
   )(transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : (Long, Long) = {
-    import org.apache.spark.sql.catalyst.TableIdentifier
-    val catalog = spark.sessionState.catalog
     // both counts observed ON the rewrite itself — separate count()
     // passes would double the table scans (the Migrator.copyTable
     // pattern: never re-scan just to read a number)
@@ -445,22 +449,96 @@ object Compaction {
     val cnt = org.apache.spark.sql.functions
       .count(org.apache.spark.sql.functions.lit(1)).as("n")
     stagedTableSwap(spark, tableName, tag) { tmp =>
-      // metadata read INSIDE the swap: the crash triage may first have
-      // to recover the table from its __<tag>_old copy
-      val spec = catalog.getTableMetadata(TableIdentifier(tableName)).bucketSpec
-        .getOrElse(throw new IllegalArgumentException(
-          s"$tableName is not bucketed — compact its directory with compactParquet instead"))
-      val data = transform(spark.table(tableName).observe(obsIn, cnt).distinct())
-        .observe(obsOut, cnt)
-      val writer = data
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
-          spec.bucketColumnNames.tail: _*)
-      (if (spec.sortColumnNames.nonEmpty)
-        writer.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
-      else writer).saveAsTable(tmp)
+      // spec read INSIDE the swap: the crash triage may first have to
+      // recover the table from its __<tag>_old copy
+      writeThroughOwnSpec(spark, tableName,
+        transform(spark.table(tableName).observe(obsIn, cnt).distinct())
+          .observe(obsOut, cnt),
+        "overwrite", tmp)
     }
     (obsIn.get("n").asInstanceOf[Long], obsOut.get("n").asInstanceOf[Long])
+  }
+
+  /** Append `rows` to the bucketed catalog table `tableName` through its
+    * OWN bucket spec, then refresh, so sessions holding a cached file
+    * listing (a streaming micro-batch's parent, a long-lived reader) see
+    * the appended rows — the one append tail of every bucketed index
+    * family. Appends are not idempotent under replay: a re-run epoch
+    * lands byte-identical residue that [[compactBucketedTable]] drops.
+    */
+  def appendBucketed(
+      spark: SparkSession,
+      tableName: String,
+      rows: org.apache.spark.sql.DataFrame): Unit = {
+    writeThroughOwnSpec(spark, tableName, rows, "append", tableName)
+    spark.catalog.refreshTable(tableName)
+  }
+
+  /** Write `data` into `target` through `tableName`'s catalog bucket
+    * spec — bucket count, bucket columns and sort columns as the build
+    * stored them, never restated by a caller, so neither an append nor
+    * a rewrite can drift from the table's layout. Loud on a table with
+    * no bucket spec (a plain directory compacts with [[compactParquet]]).
+    */
+  private def writeThroughOwnSpec(
+      spark: SparkSession,
+      tableName: String,
+      data: org.apache.spark.sql.DataFrame,
+      mode: String,
+      target: String): Unit = {
+    val spec = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tableName))
+      .bucketSpec
+      .getOrElse(throw new IllegalArgumentException(
+        s"$tableName is not a bucketed table — compact a plain directory with compactParquet"))
+    val writer = data.write.mode(mode).format("parquet")
+      .bucketBy(spec.numBuckets, spec.bucketColumnNames.head,
+        spec.bucketColumnNames.tail: _*)
+    (if (spec.sortColumnNames.nonEmpty)
+      writer.sortBy(spec.sortColumnNames.head, spec.sortColumnNames.tail: _*)
+    else writer).saveAsTable(target)
+  }
+
+  /** The CARRIED metadata columns of a bucketed index table — its stored
+    * columns minus the family's `reserved` ones — each of which an
+    * appended `batch` must supply, or the filtered probes' payload would
+    * silently go null for the appended rows. Presence is checked with
+    * the session resolver (case-insensitive by default), matching how
+    * `col()` resolves the names in the append's projection.
+    */
+  private[graft] def carriedColumns(
+      spark: SparkSession,
+      tableName: String,
+      reserved: Seq[String],
+      batch: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val carried = spark.table(tableName).columns.toSeq.filterNot(reserved.contains)
+    val resolver = spark.sessionState.analyzer.resolver
+    val missing = carried.filterNot(c => batch.columns.exists(resolver(_, c)))
+    require(missing.isEmpty,
+      s"batch lacks carried index columns: ${missing.mkString(", ")}")
+    carried
+  }
+
+  /** Index `rows` keyed by `idCol` with `src`'s `carryCols` attached,
+    * ONE metadata row per id — a duplicated id in `src` must not
+    * multiply index rows (that would skew the hot-bucket cap and break
+    * append == fresh write). Output: `rows`' columns, then `carryCols`.
+    * Shared by the writes and appends whose index rows come from a
+    * separate signature frame (minhash, dHash/audio/video).
+    */
+  private[graft] def withCarried(
+      rows: org.apache.spark.sql.DataFrame,
+      src: org.apache.spark.sql.DataFrame,
+      srcIdCol: String,
+      idCol: String,
+      carryCols: Seq[String]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    if (carryCols.isEmpty) rows
+    else rows.join(
+      src.select(col(srcIdCol).as(idCol) +: carryCols.map(col): _*)
+        .dropDuplicates(idCol),
+      Seq(idCol))
+      .select((rows.columns.toSeq ++ carryCols).map(col): _*)
   }
 
   /** [[rewriteBucketedTable]] for a PLAIN (non-bucketed) catalog

@@ -179,7 +179,7 @@ object Snapshots {
     val infos = nums.map { n =>
       val vd = versionDir(root, n)
       val info = new org.apache.hadoop.fs.Path(vd, "_version_info")
-      val (files, bytes) = listData(fs, vd)
+      val (files, bytes) = Compaction.listData(fs, vd)
       readInfoRow(spark, fs, info) match {
         case Some(r) =>
           (n, Option(r.getString(1)), Option(r.getLong(2)), bytes, files)
@@ -244,27 +244,6 @@ object Snapshots {
       } else None
     }
 
-  /** One recursive sweep of a version directory: (data files, data
-    * bytes), `_`-prefixed bookkeeping (the `_version_info` sidecar,
-    * `_SUCCESS`) excluded — [[Compaction]]'s listData, local so the
-    * version listing stays self-contained.
-    */
-  private def listData(
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path): (Long, Long) = {
-    val it = fs.listFiles(path, true)
-    var files = 0L
-    var bytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.toString.contains("/_version_info/")) {
-        files += 1; bytes += f.getLen
-      }
-    }
-    (files, bytes)
-  }
-
   /** Retention staleness for the version family — the
     * `isStaleBm25Index`-shaped signal: true when the retained-version
     * count exceeds `maxVersions` or their total data bytes exceed
@@ -283,7 +262,7 @@ object Snapshots {
     if (nums.size > maxVersions) true
     else {
       var bytes = 0L
-      nums.foreach { n => bytes += listData(fs, versionDir(root, n))._2 }
+      nums.foreach { n => bytes += Compaction.listData(fs, versionDir(root, n))._2 }
       bytes > maxBytes
     }
   }
@@ -443,7 +422,7 @@ object Snapshots {
       val hasMatch = !vDf.filter(pred).isEmpty
       if (!hasMatch) (n, -1L, -1L)
       else {
-        val (_, bytes) = listData(fs, vd)
+        val (_, bytes) = Compaction.listData(fs, vd)
         val parts = math.max(1L,
           (bytes + targetFileBytes - 1) / targetFileBytes).toInt
         val infoPath = new org.apache.hadoop.fs.Path(vd, "_version_info")

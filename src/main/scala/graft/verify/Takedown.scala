@@ -25,12 +25,22 @@ import graft.plans.{Compaction, Snapshots, ZOrder}
   * absence audit as its receipt, and [[Takedown.surfaceStats]], the
   * registry-driven staleness dashboard over the same rows.
   *
-  * Registration happens at WRITE time: the `write*Index` /
-  * [[registerCorpus]] / [[enableVersioning]] wrappers here register
-  * BEFORE they write, so a death between the two leaves a PHANTOM
-  * registration (a surface with no data — vacuously clean, skipped by
-  * the sweep) rather than an UNREGISTERED surface (data the sweep
-  * would miss). The registry deliberately over-approximates.
+  * Registration happens at WRITE time: call [[register]], then the
+  * family write (`Dedup.writeMinhashIndex`, `TextAnalysis.writeBm25Index`,
+  * … with every option the operator takes); [[registerCorpus]],
+  * [[enableVersioning]], [[writeBloomIndex]] and
+  * [[writeEmbeddingBandIndex]] do the same in one call. Registering
+  * FIRST means a death between the two leaves a PHANTOM registration (a
+  * surface with no data — vacuously clean, skipped by the sweep) rather
+  * than an UNREGISTERED surface (data the sweep would miss). The
+  * registry deliberately over-approximates.
+  *
+  * The bucketed tombstone indexes are dispatched through ONE table of
+  * index families (`IndexFamilies`): each row names the family's id
+  * column, stored layout, side tables, delete/purge/staleness verbs and
+  * maintenance action, so sweep, audit, discovery, dashboard and
+  * maintenance all read the same row. `live`, `bloom` and `embband`
+  * are not tombstone indexes and keep their own code.
   *
   * The sweep's ORDER is what makes a mid-sweep death rerunnable:
   *
@@ -70,14 +80,112 @@ object Takedown {
   /** Default registry catalog table. */
   val DefaultRegistry = "graft_surfaces"
 
-  /** Families the registry accepts. `live` is the corpus dataset
-    * directory (aux = its id column); the index families' surfaces are
-    * catalog tables; `bloom` additionally records the text column it
-    * was built from (aux) so the sweep can rebuild it.
+  /** One bucketed tombstone-index family, as every registry verb sees
+    * it.
+    *
+    * @param idCol       the stored id column the tombstones and the
+    *                    audit probes key on
+    * @param layout      recognizes the stored layout from a table's
+    *                    column list (strict-mode discovery)
+    * @param sides       side tables hung off the base table, by suffix —
+    *                    never surfaces of their own
+    * @param audited     the sides that hold per-id rows the audit probes
+    *                    too, as (suffix, audit-name tag)
+    * @param remediation the dashboard's remediation text for a stale
+    *                    surface
+    * @param maintain    runs that remediation; returns the receipt's
+    *                    action
+    */
+  private final case class IndexFamily(
+      idCol: String,
+      layout: Seq[String] => Boolean,
+      sides: Seq[String],
+      audited: Seq[(String, String)],
+      delete: (SparkSession, String, DataFrame) => Long,
+      purge: (SparkSession, String) => (Long, Long),
+      isStale: (SparkSession, String) => Boolean,
+      remediation: String,
+      maintain: (SparkSession, String) => String)
+
+  /** Purge, then compact a table that still reads stale: when replay
+    * residue alone raised the flag the purge no-ops by design, and the
+    * staged distinct rewrite of [[Compaction.compactBucketedTable]] is
+    * what drops it.
+    */
+  private def purgeThenCompact(verb: String,
+      purge: (SparkSession, String) => (Long, Long),
+      isStale: (SparkSession, String) => Boolean): (SparkSession, String) => String =
+    (spark, table) => {
+      purge(spark, table)
+      if (isStale(spark, table)) {
+        Compaction.compactBucketedTable(spark, table)
+        s"$verb+compact"
+      } else verb
+    }
+
+  /** The index-family table, by registry family name. IVF-SQ and IVF-PQ
+    * share one layout and one row; so do dHash, audio and video.
+    */
+  private val IndexFamilies: Map[String, IndexFamily] = {
+    val minhash = IndexFamily("index_id",
+      cols => cols.take(2) == Seq("index_id", "sig_0"),
+      sides = Nil, audited = Nil,
+      Dedup.deleteFromMinhashIndex(_, _, _), Dedup.purgeMinhashIndex(_, _),
+      Dedup.isStaleMinhashIndex(_, _),
+      "compactBucketedTable / purgeMinhashIndex",
+      purgeThenCompact("purgeMinhashIndex", Dedup.purgeMinhashIndex(_, _),
+        Dedup.isStaleMinhashIndex(_, _)))
+    // BM25's roster and norms hold per-doc rows (a zero-token doc lives
+    // in the roster only), so the audit probes them beside the postings
+    val bm25 = IndexFamily("doc_id",
+      cols => Seq("doc_id", "term", "tf").forall(cols.contains),
+      sides = Seq("_docs", "_norms", "_norms_stats", "_terms", "_stats"),
+      audited = Seq("_docs" -> "_roster", "_norms" -> "_norm"),
+      TextAnalysis.deleteFromBm25Index(_, _, _), TextAnalysis.purgeBm25Index(_, _),
+      TextAnalysis.isStaleBm25Index(_, _),
+      "repairBm25Index / purgeBm25Index / refreshCosineNorms",
+      (spark, table) => {
+        // norms must follow the restamped snapshot; a missing roster is
+        // repaired first
+        TextAnalysis.purgeBm25Index(spark, table)
+        if (!spark.catalog.tableExists(table + "_docs"))
+          TextAnalysis.repairBm25Index(spark, table)
+        TextAnalysis.restampBm25Index(spark, table)
+        TextAnalysis.refreshCosineNorms(spark, table)
+        "purgeBm25Index+restamp+refreshNorms"
+      })
+    // the appended-fraction / list-skew modes need a REBUILD against the
+    // corpus vectors, which maintenance cannot conjure — the purge runs,
+    // the surface may still read stale, the rebuild stays deliberate
+    val ivf = IndexFamily("neighbor_id",
+      cols => cols.contains("neighbor_id") && cols.contains("__list"),
+      sides = Seq("_centroids", "_pqseeds"), audited = Nil,
+      Similarity.deleteFromIvfSqIndex(_, _, _), Similarity.purgeIvfSqIndex(_, _),
+      Similarity.isStaleIvfSqIndex(_, _),
+      "rebuild (pinQuantizerFrom) / purgeIvfSqIndex",
+      (spark, table) => {
+        Similarity.purgeIvfSqIndex(spark, table)
+        "purgeIvfSqIndex"
+      })
+    val hash64 = IndexFamily("index_id",
+      cols => cols.take(4) == Seq("index_id", "dhash", "band", "bandval"),
+      sides = Nil, audited = Nil,
+      Multimodal.deleteFromDHashIndex(_, _, _), Multimodal.purgeDHashIndex(_, _),
+      Multimodal.isStaleDHashIndex(_, _),
+      "compactBucketedTable / purgeDHashIndex",
+      purgeThenCompact("purgeDHashIndex", Multimodal.purgeDHashIndex(_, _),
+        Multimodal.isStaleDHashIndex(_, _)))
+    Map("minhash" -> minhash, "bm25" -> bm25, "ivfsq" -> ivf, "ivfpq" -> ivf,
+      "dhash" -> hash64, "audio" -> hash64, "video" -> hash64)
+  }
+
+  /** Families the registry accepts: the index families above, plus
+    * `live` — the corpus dataset directory (aux = its id column) — and
+    * the `bloom` and `embband` screens; `bloom` additionally records the
+    * text column it was built from (aux) so the sweep can rebuild it.
     */
   val KnownFamilies: Set[String] =
-    Set("live", "minhash", "bm25", "ivfsq", "ivfpq", "dhash", "audio",
-      "video", "bloom", "embband")
+    IndexFamilies.keySet ++ Set("live", "bloom", "embband")
 
   /** Bloom-surface provenance — the field whose absence made the two
     * flagship compositions unsafe together (r18 finding): a `bloom`
@@ -107,18 +215,12 @@ object Takedown {
   private final case class Reg(family: String, surface: String, aux: String,
       provenance: String, source: String)
 
-  private val FamilyIdCol = Map(
-    "minhash" -> "index_id", "bm25" -> "doc_id",
-    "ivfsq" -> "neighbor_id", "ivfpq" -> "neighbor_id",
-    "dhash" -> "index_id", "audio" -> "index_id", "video" -> "index_id")
-
-  /** Side-table suffixes the index families hang off their base table —
-    * never surfaces of their own (the base table's family verbs own
-    * them), so registration, discovery and the audit all skip them.
+  /** Side-table suffixes of the index families — every family's
+    * [[graft.plans.Tombstones]] table plus the sides its row names.
+    * Strict-mode discovery skips them: their base table is the surface.
     */
-  private val SideSuffixes = Seq(
-    "_tombstones", "_docs", "_norms", "_norms_stats", "_terms", "_stats",
-    "_centroids", "_codebook")
+  private val SideSuffixes: Seq[String] =
+    ("_tombstones" +: IndexFamilies.values.toSeq.flatMap(_.sides)).distinct
 
   /** The registry table with read-side schema compatibility: a
     * pre-provenance registry (4 columns) reads with `provenance` and
@@ -303,71 +405,6 @@ object Takedown {
     Snapshots.enableVersioning(spark, dir)
   }
 
-  // ------------------------- self-registering index writes (register
-  // FIRST: a death in between leaves a phantom registration — a
-  // vacuously-clean surface — never an unregistered one)
-
-  def writeMinhashIndex(spark: SparkSession, corpus: String, docs: DataFrame,
-      idCol: String, textCol: String, tableName: String, n: Int = 3,
-      k: Int = 8, buckets: Int = 16, carryCols: Seq[String] = Nil,
-      registryTable: String = DefaultRegistry): Unit = {
-    register(spark, corpus, "minhash", tableName, "", registryTable)
-    Dedup.writeMinhashIndex(docs, idCol, textCol, tableName, n, k, buckets, carryCols)
-  }
-
-  def writeBm25Index(spark: SparkSession, corpus: String, docs: DataFrame,
-      idCol: String, textCol: String, tableName: String, buckets: Int = 16,
-      carryCols: Seq[String] = Nil,
-      registryTable: String = DefaultRegistry): Unit = {
-    register(spark, corpus, "bm25", tableName, "", registryTable)
-    TextAnalysis.writeBm25Index(docs, idCol, textCol, tableName, buckets, carryCols)
-  }
-
-  def writeIvfSqIndex(spark: SparkSession, corpus: String, docs: DataFrame,
-      idCol: String, vecCol: String, tableName: String, nCentroids: Int = 16,
-      buckets: Int = 16, carryCols: Seq[String] = Nil,
-      registryTable: String = DefaultRegistry): Unit = {
-    register(spark, corpus, "ivfsq", tableName, "", registryTable)
-    Similarity.writeIvfSqIndex(docs, idCol, vecCol, tableName, nCentroids,
-      buckets, carryCols = carryCols)
-  }
-
-  def writeIvfPqIndex(spark: SparkSession, corpus: String, docs: DataFrame,
-      idCol: String, vecCol: String, tableName: String, nCentroids: Int = 16,
-      m: Int = 4, nCodes: Int = 16, buckets: Int = 16,
-      registryTable: String = DefaultRegistry): Unit = {
-    register(spark, corpus, "ivfpq", tableName, "", registryTable)
-    Similarity.writeIvfPqIndex(docs, idCol, vecCol, tableName, nCentroids,
-      m, nCodes, buckets)
-  }
-
-  def writeDHashIndex(spark: SparkSession, corpus: String, media: DataFrame,
-      idCol: String, binCol: String, tableName: String, buckets: Int = 16,
-      carryCols: Seq[String] = Nil,
-      registryTable: String = DefaultRegistry): Unit = {
-    register(spark, corpus, "dhash", tableName, "", registryTable)
-    Multimodal.writeDHashIndex(media, idCol, binCol, tableName, buckets, carryCols)
-  }
-
-  def writeAudioFingerprintIndex(spark: SparkSession, corpus: String,
-      media: DataFrame, idCol: String, binCol: String, tableName: String,
-      buckets: Int = 16, canonicalRate: Int = 8000,
-      carryCols: Seq[String] = Nil,
-      registryTable: String = DefaultRegistry): Unit = {
-    register(spark, corpus, "audio", tableName, "", registryTable)
-    Multimodal.writeAudioFingerprintIndex(media, idCol, binCol, tableName,
-      buckets, canonicalRate, carryCols)
-  }
-
-  def writeVideoFingerprintIndex(spark: SparkSession, corpus: String,
-      media: DataFrame, idCol: String, binCol: String, tableName: String,
-      buckets: Int = 16, maxFrames: Int = 8, carryCols: Seq[String] = Nil,
-      registryTable: String = DefaultRegistry): Unit = {
-    register(spark, corpus, "video", tableName, "", registryTable)
-    Multimodal.writeVideoFingerprintIndex(media, idCol, binCol, tableName,
-      buckets, maxFrames, carryCols)
-  }
-
   /** Self-registering bloom write. `provenance` is REQUIRED — the one
     * decision the registry cannot infer (see [[BloomProvenances]]):
     * `"roster"` = do-not-train roster over the live corpus text
@@ -506,23 +543,12 @@ object Takedown {
     // roster blooms are rebuilt in step 6; benchmark blooms and embband
     // hold BENCHMARK content, not corpus rows — a corpus takedown has
     // nothing to remove from them
-    val families = rows.filterNot(r =>
-      r.family == "live" || r.family == "bloom" || r.family == "embband")
-    families.foreach { case Reg(family, table, _, _, _) =>
-      if (spark.catalog.tableExists(table)) family match {
-        case "minhash" =>
-          Dedup.deleteFromMinhashIndex(spark, table, ids)
-          Dedup.purgeMinhashIndex(spark, table)
-        case "bm25" =>
-          TextAnalysis.deleteFromBm25Index(spark, table, ids)
-          TextAnalysis.purgeBm25Index(spark, table)
-        case "ivfsq" | "ivfpq" =>
-          Similarity.deleteFromIvfSqIndex(spark, table, ids)
-          Similarity.purgeIvfSqIndex(spark, table)
-        case "dhash" | "audio" | "video" =>
-          Multimodal.deleteFromDHashIndex(spark, table, ids)
-          Multimodal.purgeDHashIndex(spark, table)
-      }
+    rows.foreach { r =>
+      IndexFamilies.get(r.family).filter(_ => spark.catalog.tableExists(r.surface))
+        .foreach { f =>
+          f.delete(spark, r.surface, ids)
+          f.purge(spark, r.surface)
+        }
     }
 
     // 4. live delete — z-order clustered datasets route through the
@@ -534,12 +560,7 @@ object Takedown {
     }
     if (fs.exists(new org.apache.hadoop.fs.Path(qualified, "_zorder_meta"))) {
       // file count from current data bytes — purgeVersions' sizing rule
-      val it = fs.listFiles(qualified, true)
-      var bytes = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile && !f.getPath.getName.startsWith("_")) bytes += f.getLen
-      }
+      val bytes = Compaction.listData(fs, qualified)._2
       val parts = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
       ZOrder.deleteWhereZorder(spark, liveDir, condition, parts)
     } else
@@ -585,9 +606,10 @@ object Takedown {
 
   /** The audit surface list a sweep (or an independent re-audit)
     * covers: live, every registered index family's id-presence frame
-    * (bm25 contributes postings + roster + norms), and one surface per
-    * retained version. Names are deterministic: family name, suffixed
-    * `_2`, `_3`… when a corpus registers several tables of one family.
+    * (plus its row's audited sides — BM25's roster and norms), and one
+    * surface per retained version. Names are deterministic: family
+    * name, suffixed `_2`, `_3`… when a corpus registers several tables
+    * of one family.
     * Bloom has no per-id rows (bits are shared) and is excluded — its
     * deletion story is the rebuild in [[sweep]] step 6.
     */
@@ -606,22 +628,18 @@ object Takedown {
       if (n == 1) k else s"${k}_$n"
     }
     val live = Seq(("live", spark.read.parquet(liveDir), idCol))
-    val index = rows.filterNot(r =>
-      r._1 == "live" || r._1 == "bloom" || r._1 == "embband")
-      .filter(r => spark.catalog.tableExists(r._2))
-      .flatMap { case (family, table, _) =>
-        val idc = FamilyIdCol(family)
-        val base = Seq((name(family),
-          spark.table(table).select(idc).distinct(), idc))
-        val bm25Sides =
-          if (family != "bm25") Seq.empty
-          else Seq("_docs" -> "_roster", "_norms" -> "_norm")
-            .filter { case (sfx, _) => spark.catalog.tableExists(table + sfx) }
-            .map { case (sfx, tag) =>
-              (name(family, tag), spark.table(table + sfx).select(idc), idc)
-            }
-        base ++ bm25Sides
-      }
+    val index = rows.toSeq.flatMap { case (family, table, _) =>
+      IndexFamilies.get(family).filter(_ => spark.catalog.tableExists(table))
+        .toSeq.flatMap { f =>
+          val idc = f.idCol
+          (name(family), spark.table(table).select(idc).distinct(), idc) +:
+            f.audited
+              .filter { case (sfx, _) => spark.catalog.tableExists(table + sfx) }
+              .map { case (sfx, tag) =>
+                (name(family, tag), spark.table(table + sfx).select(idc), idc)
+              }
+        }
+    }
     val versions =
       if (Snapshots.isVersioned(spark, liveDir))
         Snapshots.versionSurfaces(spark, liveDir, idCol)
@@ -648,16 +666,7 @@ object Takedown {
       .filterNot(n => SideSuffixes.exists(n.toLowerCase.endsWith))
       .flatMap { n =>
         val cols = scala.util.Try(spark.table(n).columns.toSeq).getOrElse(Seq.empty)
-        val idc =
-          if (cols.take(4) == Seq("index_id", "dhash", "band", "bandval"))
-            Some("index_id") // dHash/audio/video band layout
-          else if (cols.take(2) == Seq("index_id", "sig_0"))
-            Some("index_id") // MinHash signature layout
-          else if (Seq("doc_id", "term", "tf").forall(cols.contains))
-            Some("doc_id") // BM25 postings layout
-          else if (cols.contains("neighbor_id") && cols.contains("__list"))
-            Some("neighbor_id") // IVF code layout
-          else None
+        val idc = IndexFamilies.values.find(_.layout(cols)).map(_.idCol)
         idc.filter { c =>
           val t = spark.table(n)
           // isEmpty (executeTake(1)), not limit(1).count(): count plans
@@ -713,20 +722,9 @@ object Takedown {
           val present = spark.catalog.tableExists(surface)
           val (stale, fix): (Option[Boolean], String) =
             if (!present) (None, "re-run the registered write")
-            else fam match {
-              case "minhash" =>
-                (Some(Dedup.isStaleMinhashIndex(spark, surface)),
-                  "compactBucketedTable / purgeMinhashIndex")
-              case "bm25" =>
-                (Some(TextAnalysis.isStaleBm25Index(spark, surface)),
-                  "repairBm25Index / purgeBm25Index / refreshCosineNorms")
-              case "ivfsq" | "ivfpq" =>
-                (Some(Similarity.isStaleIvfSqIndex(spark, surface)),
-                  "rebuild (pinQuantizerFrom) / purgeIvfSqIndex")
-              case "dhash" | "audio" | "video" =>
-                (Some(Multimodal.isStaleDHashIndex(spark, surface)),
-                  "compactBucketedTable / purgeDHashIndex")
-              case "bloom" =>
+            else IndexFamilies.get(fam) match {
+              case Some(f) => (Some(f.isStale(spark, surface)), f.remediation)
+              case None if fam == "bloom" =>
                 // remediation depends on provenance — maintain widens a
                 // roster bloom from live, a benchmark bloom only from
                 // its registered source, and refuses to guess for a
@@ -740,7 +738,7 @@ object Takedown {
                   case _ => "setBloomProvenance (roster | benchmark) first"
                 }
                 (Some(Corpus.isStaleBloomIndex(spark, surface)), fix)
-              case "embband" =>
+              case None => // embband
                 (Some(Corpus.isStaleEmbeddingBandIndex(spark, surface)),
                   "compactEmbeddingBandIndex")
             }
@@ -763,17 +761,12 @@ object Takedown {
     *    count sized current-bytes / `targetFileBytes` (the sweep's rule)
     *  - versions over budget → [[Snapshots.vacuumVersions]] keeping
     *    `keepLastVersions`
-    *  - minhash / dhash / audio / video → tombstone purge (the staged
-    *    distinct rewrite also drops replay residue); when residue alone
-    *    raised the flag the purge no-ops by design, so a still-stale
-    *    table then gets [[Compaction.compactBucketedTable]]
-    *  - bm25 → purge + restamp + [[TextAnalysis.refreshCosineNorms]]
-    *    (norms must follow the restamped snapshot; a missing roster is
-    *    repaired first)
-    *  - ivfsq / ivfpq → [[Similarity.purgeIvfSqIndex]]; the
-    *    appended-fraction / list-skew modes need a REBUILD against the
-    *    corpus vectors, which maintenance cannot conjure — those report
-    *    `stale_after = true` and the rebuild stays a deliberate act
+    *  - an index family → its table row's `maintain` action: the
+    *    tombstone purge (the staged distinct rewrite also drops replay
+    *    residue), then per family — the signature indexes compact a
+    *    table residue alone left stale, BM25 restamps and refreshes its
+    *    cosine norms, and IVF reports `stale_after = true` when only a
+    *    rebuild against the corpus vectors can help
     *  - bloom over fill → rebuild WIDER from the registered text
     *    column over its PROVENANCE source: live corpus for a roster
     *    bloom ([[sweep]] step 6's path), the registered benchmark
@@ -808,17 +801,14 @@ object Takedown {
     val actions = dash.map { case (family, surface, present, stale) =>
       val action: String =
         if (!(present && stale.contains(true))) "none"
+        else if (IndexFamilies.contains(family))
+          IndexFamilies(family).maintain(spark, surface)
         else family match {
           case "live" =>
             val p = new org.apache.hadoop.fs.Path(surface)
             val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             val qualified = fs.makeQualified(p)
-            val it = fs.listFiles(qualified, true)
-            var bytes = 0L
-            while (it.hasNext) {
-              val f = it.next()
-              if (f.isFile && !f.getPath.getName.startsWith("_")) bytes += f.getLen
-            }
+            val bytes = Compaction.listData(fs, qualified)._2
             // floor of 4, not 1: z-order staleness reads per-file span
             // COVERAGE, and a 1-2 file layout covers ~the whole span
             // per file by construction — it would re-read stale forever
@@ -843,28 +833,6 @@ object Takedown {
           case "versions" =>
             Snapshots.vacuumVersions(spark, surface, keepLastVersions)
             s"vacuumVersions(keepLast=$keepLastVersions)"
-          case "minhash" =>
-            Dedup.purgeMinhashIndex(spark, surface)
-            if (Dedup.isStaleMinhashIndex(spark, surface)) {
-              Compaction.compactBucketedTable(spark, surface)
-              "purgeMinhashIndex+compact"
-            } else "purgeMinhashIndex"
-          case "bm25" =>
-            TextAnalysis.purgeBm25Index(spark, surface)
-            if (!spark.catalog.tableExists(surface + "_docs"))
-              TextAnalysis.repairBm25Index(spark, surface)
-            TextAnalysis.restampBm25Index(spark, surface)
-            TextAnalysis.refreshCosineNorms(spark, surface)
-            "purgeBm25Index+restamp+refreshNorms"
-          case "ivfsq" | "ivfpq" =>
-            Similarity.purgeIvfSqIndex(spark, surface)
-            "purgeIvfSqIndex"
-          case "dhash" | "audio" | "video" =>
-            Multimodal.purgeDHashIndex(spark, surface)
-            if (Multimodal.isStaleDHashIndex(spark, surface)) {
-              Compaction.compactBucketedTable(spark, surface)
-              "purgeDHashIndex+compact"
-            } else "purgeDHashIndex"
           case "bloom" =>
             val reg = regRows.find(r => r.family == "bloom" && r.surface == surface)
             val textCol = reg.map(_.aux).filter(_.nonEmpty)

@@ -628,6 +628,26 @@ class DedupSpec extends SparkSpec {
     assert(!deHits.contains(9002L) && !deHits.contains(firstEn.getLong(0)), deHits.toString)
   }
 
+  test("minhash append with carried columns: a duplicated batch id lands one row, exactly as a fresh write") {
+    import spark.implicits._
+    val seed = Seq((9100L, "seed document text for the carried index", "de"))
+      .toDF("doc_id", "text", "lang")
+    // one id twice in the batch: the uncarried signature is one row per
+    // id, and the carried projection must not multiply it
+    val text = "the quick brown fox jumps over the lazy dog again"
+    val batch = Seq((9101L, text, "en"), (9101L, text, "en"))
+      .toDF("doc_id", "text", "lang")
+    Dedup.writeMinhashIndex(seed, "doc_id", "text", "mh_idx_dupid",
+      buckets = 4, carryCols = Seq("lang"))
+    Dedup.appendToMinhashIndex(spark, "mh_idx_dupid", batch, "doc_id", "text")
+    Dedup.writeMinhashIndex(seed.unionByName(batch), "doc_id", "text",
+      "mh_idx_dupid_ref", buckets = 4, carryCols = Seq("lang"))
+    def rowsOf(t: String) = spark.table(t).filter(col("index_id") === 9101L)
+      .collect().map(_.toString).sorted.toSeq
+    assert(rowsOf("mh_idx_dupid").length === 1, rowsOf("mh_idx_dupid"))
+    assert(rowsOf("mh_idx_dupid") === rowsOf("mh_idx_dupid_ref"))
+  }
+
   test("semanticDedup: planted identical vectors collapse to the lower id") {
     val emb = table("embeddings").select("vec_id", "embedding").limit(200)
     val planted = emb.union(emb.select(

@@ -43,6 +43,28 @@ class TakedownSpec extends SparkSpec {
     "P6\n9 8\n255\n".getBytes("US-ASCII") ++ px
   }
 
+  /** Register first, then the family write — the order Takedown's
+    * registry contract documents (a death in between leaves a phantom
+    * registration, never an unregistered surface).
+    */
+  private def registerThenWrite(corpus: String, family: String, table: String)(
+      write: String => Unit): Unit = {
+    Takedown.register(spark, corpus, family, table, registryTable = SharedReg)
+    write(table)
+  }
+
+  private def embFrame(n: Int) = {
+    import spark.implicits._
+    (0 until n).map(d => (Off + d,
+      Array.tabulate(8)(j => mix8(d * 8L + j) / 255.0f)))
+      .toDF("doc_id", "embedding")
+  }
+
+  private def imgFrame(n: Int) = {
+    import spark.implicits._
+    (0 until n).map(d => (Off + d, img(d))).toDF("doc_id", "payload")
+  }
+
   private def docsFrame(n: Int) = {
     import spark.implicits._
     // every token carries the doc number, so every token n-gram is
@@ -62,23 +84,21 @@ class TakedownSpec extends SparkSpec {
     docs.write.parquet(dir)
     Takedown.enableVersioning(spark, "tkd1", dir, "doc_id", reg)
     Compaction.compactParquet(spark, dir) // v1 = full pre-takedown corpus
-    Takedown.writeBm25Index(spark, "tkd1", docs, "doc_id", "text",
-      "tkd1_bm25", buckets = 4, registryTable = reg)
+    registerThenWrite("tkd1", "bm25", "tkd1_bm25")(
+      TextAnalysis.writeBm25Index(docs, "doc_id", "text", _, buckets = 4))
     TextAnalysis.refreshCosineNorms(spark, "tkd1_bm25")
-    Takedown.writeMinhashIndex(spark, "tkd1", docs, "doc_id", "text",
-      "tkd1_mh", buckets = 4, registryTable = reg)
-    val emb = (0 until 70).map(d => (Off + d,
-      Array.tabulate(8)(j => mix8(d * 8L + j) / 255.0f)))
-      .toDF("doc_id", "embedding")
-    Takedown.writeIvfSqIndex(spark, "tkd1", emb, "doc_id", "embedding",
-      "tkd1_sq", nCentroids = 4, buckets = 4, registryTable = reg)
-    Takedown.writeIvfPqIndex(spark, "tkd1", emb, "doc_id", "embedding",
-      "tkd1_pq", nCentroids = 4, m = 4, nCodes = 8, buckets = 4,
-      registryTable = reg)
-    val imgs = (0 until 70).map(d => (Off + d, img(d))).toDF("doc_id", "payload")
-    Takedown.writeDHashIndex(spark, "tkd1", imgs, "doc_id", "payload",
-      "tkd1_dh", buckets = 4, registryTable = reg)
-    // the registry knows every family (self-registration at write time)
+    registerThenWrite("tkd1", "minhash", "tkd1_mh")(
+      Dedup.writeMinhashIndex(docs, "doc_id", "text", _, buckets = 4))
+    val emb = embFrame(70)
+    registerThenWrite("tkd1", "ivfsq", "tkd1_sq")(
+      Similarity.writeIvfSqIndex(emb, "doc_id", "embedding", _,
+        nCentroids = 4, buckets = 4))
+    registerThenWrite("tkd1", "ivfpq", "tkd1_pq")(
+      Similarity.writeIvfPqIndex(emb, "doc_id", "embedding", _,
+        nCentroids = 4, m = 4, nCodes = 8, buckets = 4))
+    registerThenWrite("tkd1", "dhash", "tkd1_dh")(
+      Multimodal.writeDHashIndex(imgFrame(70), "doc_id", "payload", _, buckets = 4))
+    // the registry knows every family (registered at write time)
     val fams = Takedown.registered(spark, "tkd1", reg)
       .select("family").collect().map(_.getString(0)).toSet
     assert(fams === Set("live", "bm25", "minhash", "ivfsq", "ivfpq", "dhash"))
@@ -109,30 +129,47 @@ class TakedownSpec extends SparkSpec {
   }
 
   test("strict sweep fails loudly on an unregistered index-layout table holding swept ids; registering it (or strict=false) proceeds") {
-    val dir = tmp("graft_tkd2")
-    val reg = SharedReg
     val docs = docsFrame(40)
-    docs.write.parquet(dir)
-    Takedown.registerCorpus(spark, "tkd2", dir, "doc_id", reg)
-    // the FORGOTTEN surface: built through the primitive verb, never
-    // registered — exactly the operational error the registry exists
-    // to catch
-    Dedup.writeMinhashIndex(docs, "doc_id", "text", "tkd2_forgotten", buckets = 4)
-    val e = intercept[IllegalArgumentException] {
-      Takedown.sweep(spark, "tkd2", (col("doc_id") - Off) % 5 === 0,
-        registryTable = reg)
+    val emb = embFrame(40)
+    val imgs = imgFrame(40)
+    // one FORGOTTEN surface per stored layout discovery recognizes:
+    // built through the primitive verb, never registered — exactly the
+    // operational error the registry exists to catch
+    val layouts: Seq[(String, String => Unit)] = Seq(
+      "minhash" -> ((t: String) =>
+        Dedup.writeMinhashIndex(docs, "doc_id", "text", t, buckets = 4)),
+      "bm25" -> ((t: String) =>
+        TextAnalysis.writeBm25Index(docs, "doc_id", "text", t, buckets = 4)),
+      "ivfsq" -> ((t: String) => Similarity.writeIvfSqIndex(emb, "doc_id",
+        "embedding", t, nCentroids = 4, buckets = 4)),
+      "ivfpq" -> ((t: String) => Similarity.writeIvfPqIndex(emb, "doc_id",
+        "embedding", t, nCentroids = 4, m = 4, nCodes = 8, buckets = 4)),
+      "dhash" -> ((t: String) =>
+        Multimodal.writeDHashIndex(imgs, "doc_id", "payload", t, buckets = 4)))
+    layouts.foreach { case (family, write) =>
+      // a corpus per layout: a completed sweep leaves no ids to refuse on
+      val (corpus, forgotten) = (s"tkd2_$family", s"tkd2_forgotten_$family")
+      val dir = tmp(s"graft_tkd2_$family")
+      docs.write.parquet(dir)
+      Takedown.registerCorpus(spark, corpus, dir, "doc_id", SharedReg)
+      write(forgotten)
+      val e = intercept[IllegalArgumentException] {
+        Takedown.sweep(spark, corpus, (col("doc_id") - Off) % 5 === 0,
+          registryTable = SharedReg)
+      }
+      assert(e.getMessage.contains("UNREGISTERED") &&
+        e.getMessage.contains(forgotten), s"$family: ${e.getMessage}")
+      // nothing was touched: the refusal precedes every delete
+      assert(spark.read.parquet(dir).count() === 40L, family)
+      // register the forgotten surface -> the same sweep completes clean
+      Takedown.register(spark, corpus, family, forgotten, registryTable = SharedReg)
+      val audit = Takedown.sweep(spark, corpus, (col("doc_id") - Off) % 5 === 0,
+        registryTable = SharedReg)
+      val cols = audit.columns.filter(_.endsWith("_rows"))
+      assert(cols.contains(s"${family}_rows"), s"$family: ${cols.mkString(",")}")
+      assert(audit.count() === 8L, family)
+      assert(audit.filter(cols.map(col).reduce(_ + _) > 0).count() === 0L, family)
     }
-    assert(e.getMessage.contains("UNREGISTERED") &&
-      e.getMessage.contains("tkd2_forgotten"), e.getMessage)
-    // nothing was touched: the refusal precedes every delete
-    assert(spark.read.parquet(dir).count() === 40L)
-    // register the forgotten surface -> the same sweep completes clean
-    Takedown.register(spark, "tkd2", "minhash", "tkd2_forgotten",
-      registryTable = reg)
-    val audit = Takedown.sweep(spark, "tkd2", (col("doc_id") - Off) % 5 === 0,
-      registryTable = reg)
-    assert(audit.count() === 8L)
-    assert(audit.filter(col("live_rows") + col("minhash_rows") > 0).count() === 0L)
   }
 
   test("crash-ordering: a sweep that died mid-way (after some index deletes, or after the live delete) completes on rerun") {
@@ -142,10 +179,10 @@ class TakedownSpec extends SparkSpec {
     val docs = docsFrame(50)
     docs.write.parquet(dir)
     Takedown.enableVersioning(spark, "tkd3", dir, "doc_id", reg)
-    Takedown.writeBm25Index(spark, "tkd3", docs, "doc_id", "text",
-      "tkd3_bm25", buckets = 4, registryTable = reg)
-    Takedown.writeMinhashIndex(spark, "tkd3", docs, "doc_id", "text",
-      "tkd3_mh", buckets = 4, registryTable = reg)
+    registerThenWrite("tkd3", "bm25", "tkd3_bm25")(
+      TextAnalysis.writeBm25Index(docs, "doc_id", "text", _, buckets = 4))
+    registerThenWrite("tkd3", "minhash", "tkd3_mh")(
+      Dedup.writeMinhashIndex(docs, "doc_id", "text", _, buckets = 4))
     val cond = (col("doc_id") - Off) % 4 === 0
     val doomed = docs.filter(cond).select("doc_id")
     // crash shape A: one family tombstoned, everything else untouched
@@ -202,10 +239,10 @@ class TakedownSpec extends SparkSpec {
     docs.write.parquet(dir)
     Takedown.enableVersioning(spark, "tkd5", dir, "doc_id", reg)
     Compaction.compactParquet(spark, dir) // one retained version
-    Takedown.writeBm25Index(spark, "tkd5", docs, "doc_id", "text",
-      "tkd5_bm25", buckets = 4, registryTable = reg)
-    Takedown.writeMinhashIndex(spark, "tkd5", docs, "doc_id", "text",
-      "tkd5_mh", buckets = 4, registryTable = reg)
+    registerThenWrite("tkd5", "bm25", "tkd5_bm25")(
+      TextAnalysis.writeBm25Index(docs, "doc_id", "text", _, buckets = 4))
+    registerThenWrite("tkd5", "minhash", "tkd5_mh")(
+      Dedup.writeMinhashIndex(docs, "doc_id", "text", _, buckets = 4))
     // phantom: registered, never written (the register-first crash shape)
     Takedown.register(spark, "tkd5", "dhash", "tkd5_never_written",
       registryTable = reg)
@@ -238,12 +275,12 @@ class TakedownSpec extends SparkSpec {
     val seed = Seq((S + 100L, T(S + 100L))).toDF("doc_id", "text")
     val (mh, bm, bloom) = ("tkd_cur_mh", "tkd_cur_bm", "tkd_cur_bloom")
     val reg = SharedReg
-    // seed every index through the self-registering wrappers, then
-    // stream — the funnel's appends keep the REGISTERED tables current
-    Takedown.writeMinhashIndex(spark, "tkd_cur", seed, "doc_id", "text",
-      mh, buckets = 4, registryTable = reg)
-    Takedown.writeBm25Index(spark, "tkd_cur", seed, "doc_id", "text",
-      bm, buckets = 4, registryTable = reg)
+    // seed every index registered-then-written, then stream — the
+    // funnel's appends keep the REGISTERED tables current
+    registerThenWrite("tkd_cur", "minhash", mh)(
+      Dedup.writeMinhashIndex(seed, "doc_id", "text", _, buckets = 4))
+    registerThenWrite("tkd_cur", "bm25", bm)(
+      TextAnalysis.writeBm25Index(seed, "doc_id", "text", _, buckets = 4))
     TextAnalysis.refreshCosineNorms(spark, bm)
     // the funnel's screen holds BENCHMARK shingles — provenance
     // "benchmark", the field whose absence made the pre-r19 sweep
@@ -312,10 +349,10 @@ class TakedownSpec extends SparkSpec {
     val docs = docsFrame(40)
     docs.write.parquet(dir)
     Takedown.registerCorpus(spark, "tkdm", dir, "doc_id", reg)
-    Takedown.writeMinhashIndex(spark, "tkdm", docs, "doc_id", "text",
-      "tkdm_mh", buckets = 4, registryTable = reg)
-    Takedown.writeBm25Index(spark, "tkdm", docs, "doc_id", "text",
-      "tkdm_bm25", buckets = 4, registryTable = reg)
+    registerThenWrite("tkdm", "minhash", "tkdm_mh")(
+      Dedup.writeMinhashIndex(docs, "doc_id", "text", _, buckets = 4))
+    registerThenWrite("tkdm", "bm25", "tkdm_bm25")(
+      TextAnalysis.writeBm25Index(docs, "doc_id", "text", _, buckets = 4))
     TextAnalysis.refreshCosineNorms(spark, "tkdm_bm25")
     val vecs = table("embeddings").limit(30).select("embedding")
     Takedown.writeEmbeddingBandIndex(spark, "tkdm", vecs, "embedding",
