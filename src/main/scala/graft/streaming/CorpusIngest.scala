@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{Dedup, Multimodal, TextAnalysis}
+import org.apache.spark.sql.graftbridge.CacheBridge
+
+import graft.operators.{Corpus, Dedup, Multimodal, NormForm, TextAnalysis}
 
 /** Streaming corpus ingest — the training-data pipeline's cleaning
   * stages (quality gate → content dedup → per-source rollup) run
@@ -27,6 +29,27 @@ import graft.operators.{Dedup, Multimodal, TextAnalysis}
   * needs (full-history dedup is a periodic batch job with
   * [[Dedup.exact]]; the stream handles the near-horizon repeats that
   * dominate crawl traffic).
+  *
+  * EPOCH SINK — the contract every `start*` verb here and
+  * [[IncrementalSync.start]] share, provided in one place; each verb's
+  * doc states only its own per-epoch work:
+  *  - SENTINEL: a flat destination gets an empty schema-bearing
+  *    `batch=-1` directory at start, so a stream whose batches are all
+  *    empty (or have zero survivors) still leaves a readable empty
+  *    dataset. [[startClustered]]'s z-order layout gets none.
+  *  - EMPTY GUARD: an empty micro-batch (watermark advance, a quiet
+  *    period) does no work at all — no write, no index probe, no
+  *    append.
+  *  - REPLAY: a non-empty micro-batch lands as `batch=<id>` with
+  *    overwrite; Structured Streaming replays a crashed epoch (crash
+  *    between the write and the offset commit) under the same id, so
+  *    the replay replaces its own directory instead of duplicating
+  *    rows.
+  *  - OWNER REFRESH: every catalog table an epoch writes (an index and
+  *    its side tables, a moments table) is refreshed after the epoch
+  *    in the session that STARTED the stream, so that session reads
+  *    post-epoch state with no table refresh of its own. Any other
+  *    session still refreshes before reading behind the stream.
   */
 object CorpusIngest {
 
@@ -205,53 +228,16 @@ object CorpusIngest {
         aggregate(col("qs_sketch.items"), lit(0L), (a, it) => a + it.getField("w"))
           .as("n_mass"))
 
-  /** Pre-create `destDir` with an empty schema-bearing `batch=-1`
-    * sentinel (mode `ignore`: first start wins, restarts no-op). Empty
-    * micro-batches skip their writes, so a run whose batches are ALL
-    * empty — or a stream with zero survivors — would otherwise never
-    * create `destDir` and downstream `spark.read.parquet(destDir)`
-    * would throw path-not-found instead of yielding an empty frame.
-    * Real batch ids are ≥ 0, so the sentinel partition can never
-    * collide, and its zero rows leave every read-back unchanged.
-    */
-  private def ensureDest(cleaned: DataFrame, destDir: String): Unit = {
-    val spark = cleaned.sparkSession
-    spark
-      .createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], cleaned.schema)
-      // an emptyRDD has ZERO partitions → zero tasks → no part files,
-      // and a directory holding only _SUCCESS still fails schema
-      // inference; one empty part file with a schema footer is the
-      // whole point of the sentinel
-      .repartition(1)
-      .write.mode("ignore").parquet(s"$destDir/batch=-1")
-  }
-
-  /** Start the ingest: cleaned rows append into `destDir`, one
-    * idempotent parquet directory per micro-batch (same replay contract
-    * as [[IncrementalSync.start]]).
+  /** Start the ingest: cleaned rows land in `destDir` through the epoch
+    * sink (object doc) — exactly [[IncrementalSync.start]].
     */
   def start(
       cleaned: DataFrame,
       destDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery = {
-    ensureDest(cleaned, destDir)
-    cleaned.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // watermark-advance batches arrive empty; an absent batch=<id>
-        // directory reads the same as an empty one, so skip the write
-        // (guard, not `return` — non-local returns abort the stream)
-        if (!batch.isEmpty)
-          batch.write
-            .mode("overwrite")
-            .parquet(s"$destDir/batch=$batchId")
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    IncrementalSync.start(cleaned, destDir, checkpointDir, trigger)
 
   /** The per-epoch decontamination audit log as ONE frame, schema-
     * merged: epochs written before the semantic screen existed lack
@@ -261,15 +247,13 @@ object CorpusIngest {
     * can silently drop it depending on which footer Spark samples.
     */
   def decontamLog(spark: SparkSession, destDir: String): DataFrame =
-    spark.read.option("mergeSchema", "true")
-      .parquet(s"${destDir}_decontam_log")
+    auditLog(spark, destDir, "decontam")
 
   /** [[decontamLog]] for the curated funnel's per-epoch audit
     * (`contaminated_semantic` is the r17-added column there).
     */
   def curateLog(spark: SparkSession, destDir: String): DataFrame =
-    spark.read.option("mergeSchema", "true")
-      .parquet(s"${destDir}_curate_log")
+    auditLog(spark, destDir, "curate")
 
   /** [[start]] composed with the persisted benchmark bloom index
     * ([[graft.operators.Corpus.bloomDecontaminationFromIndex]]):
@@ -277,10 +261,9 @@ object CorpusIngest {
     * documents are dropped before the epoch lands — benchmark overlap
     * never reaches the training corpus, instead of being re-filtered
     * at every downstream read. The flags are exact modular arithmetic
-    * over the batch, so a replayed epoch (crash between parquet write
-    * and offset commit) recomputes the same survivor set and the
-    * idempotent `batch=<id>` overwrite holds — the flat sink's replay
-    * contract, unchanged.
+    * over the batch, so a replayed epoch recomputes the same survivor
+    * set and the epoch sink's replay contract (object doc) holds
+    * unchanged.
     *
     * Each epoch also lands a one-row audit record at
     * `<destDir>_decontam_log/batch=<id>` (docs in, docs dropped, and
@@ -318,52 +301,29 @@ object CorpusIngest {
     // ([[graft.operators.Corpus.appendToEmbeddingBandIndex]]) gates
     // from the NEXT micro-batch. Both screens are deterministic over
     // the batch, so the replay contract is unchanged.
-    embeddingTable.foreach { _ =>
-      require(cleaned.columns.contains(embVecCol),
-        s"semantic decontamination needs the stream to carry '$embVecCol'")
+    val semScreen = semanticFlags(cleaned, embeddingTable, idCol, embVecCol, embThreshold)
+    EpochSink.startFlat(cleaned, destDir, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // the flag passes scan the batch several times (flags +
+      // anti-join); pin it so the epoch isn't recomputed
+      batch.persist()
+      try {
+        val lexFlagged = bloomFlags(batch, idCol, textCol, bloomTable, NormForm.Default)
+        val semFlagged = semScreen.map(_(batch))
+        val flagged = semFlagged
+          .map(lexFlagged.unionByName(_)).getOrElse(lexFlagged)
+        EpochSink.land(batch.join(flagged, Seq(idCol), "left_anti"), destDir, batchId)
+        val nIn = batch.count()
+        val nOut = spark.read.parquet(s"$destDir/batch=$batchId").count()
+        // per-screen accounting beside the total: semantic hits can
+        // overlap lexical ones, so the columns are flag counts, not
+        // a partition of docs_dropped
+        val nSem = semFlagged.map(_.distinct().count()).getOrElse(0L)
+        writeAudit(spark, destDir, "decontam", batchId,
+          "docs_in" -> nIn, "docs_dropped" -> (nIn - nOut), "flagged_semantic" -> nSem)
+      } finally batch.unpersist()
+      Nil
     }
-    ensureDest(cleaned, destDir)
-    cleaned.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // empty watermark-advance batches write nothing (guard, not
-        // `return` — non-local returns abort the stream)
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          // the flag passes scan the batch several times (flags +
-          // anti-join); pin it so the epoch isn't recomputed
-          batch.persist()
-          try {
-            val lexFlagged = graft.operators.Corpus
-              .bloomDecontaminationFromIndex(batch, idCol, textCol, bloomTable)
-              .filter(org.apache.spark.sql.functions.col("flagged"))
-              .select(idCol)
-            val semFlagged = embeddingTable.map { tbl =>
-              graft.operators.Corpus.embeddingDecontaminationFromIndex(
-                batch, idCol, embVecCol, tbl, embThreshold)
-                .filter(org.apache.spark.sql.functions.col("contaminated"))
-                .select(idCol)
-            }
-            val flagged = semFlagged
-              .map(lexFlagged.unionByName(_)).getOrElse(lexFlagged)
-            val survivors = batch.join(flagged, Seq(idCol), "left_anti")
-            survivors.write.mode("overwrite").parquet(s"$destDir/batch=$batchId")
-            val nIn = batch.count()
-            val nOut = spark.read.parquet(s"$destDir/batch=$batchId").count()
-            // per-screen accounting beside the total: semantic hits can
-            // overlap lexical ones, so the columns are flag counts, not
-            // a partition of docs_dropped
-            val nSem = semFlagged.map(_.distinct().count()).getOrElse(0L)
-            Seq((nIn, nIn - nOut, nSem))
-              .toDF("docs_in", "docs_dropped", "flagged_semantic")
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"${destDir}_decontam_log/batch=$batchId")
-          } finally batch.unpersist()
-        }
-      }
-      .start()
   }
 
   /** [[start]] with CLUSTERED epochs — the perpetual crawler composed
@@ -377,7 +337,9 @@ object CorpusIngest {
     * overwrite-idempotent `batch=<id>` directory
     * ([[graft.plans.ZOrder.zorderAppendEpoch]] — same replay contract
     * as the flat sink, so a crashed-and-replayed micro-batch
-    * overwrites its own epoch instead of duplicating rows).
+    * overwrites its own epoch instead of duplicating rows). The
+    * destination is a z-order layout, not a flat one, so it gets no
+    * `batch=-1` sentinel.
     *
     * Operations between epochs: [[graft.plans.ZOrder.isStaleZorder]]
     * reads the accumulated file-coverage/drift,
@@ -397,28 +359,21 @@ object CorpusIngest {
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
     require(clusterCols.nonEmpty && numFilesPerEpoch > 0)
-    cleaned.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // empty watermark-advance batches write nothing (guard, not
-        // `return` — non-local returns abort the stream)
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          // first non-empty epoch establishes the contract; a replay
-          // re-derives the identical boundaries (deterministic sketch
-          // over the same epoch), so the crash window between init and
-          // append is replay-healed
-          if (!graft.plans.ZOrder.hasLayout(spark, destDir))
-            graft.plans.ZOrder.zorderInit(batch, clusterCols, destDir, bits, curve)
-          graft.plans.ZOrder.zorderAppendEpoch(batch, destDir, batchId, numFilesPerEpoch)
-        }
-      }
-      .start()
+    EpochSink.start(cleaned, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // first non-empty epoch establishes the contract; a replay
+      // re-derives the identical boundaries (deterministic sketch
+      // over the same epoch), so the crash window between init and
+      // append is replay-healed
+      if (!graft.plans.ZOrder.hasLayout(spark, destDir))
+        graft.plans.ZOrder.zorderInit(batch, clusterCols, destDir, bits, curve)
+      graft.plans.ZOrder.zorderAppendEpoch(batch, destDir, batchId, numFilesPerEpoch)
+      Nil
+    }
   }
 
-  /** The full crawl-epoch ingest: [[start]]'s idempotent per-batch sink
-    * composed with the PERSISTENT near-dup history — each micro-batch
+  /** The full crawl-epoch ingest: [[start]]'s epoch sink composed with
+    * the PERSISTENT near-dup history — each micro-batch
     * is checked against the materialized signature index
     * ([[Dedup.portableMinhashPairsAgainstIndex]]: history never
     * re-signatured, scan bucket-pruned to the batch's blocking keys)
@@ -459,58 +414,21 @@ object CorpusIngest {
       k: Int = 8,
       threshold: Double = 0.9,
       trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery = {
-    ensureDest(cleaned, destDir)
-    cleaned.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // watermark-advance micro-batches arrive EMPTY (the final
-        // AvailableNow pass; quiet periods on a perpetual stream):
-        // skip the whole index join/append — an absent batch=<id>
-        // directory reads the same as an empty one, a replayed empty
-        // batch recomputes empty, and the signature/index state is
-        // untouched either way. (A guard, not `return`: returning
-        // from a closure is non-local and would abort the stream.)
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val hits = Dedup.portableMinhashPairsAgainstIndex(
-            spark, indexTable, batch, idCol, textCol, n, k, threshold)
-            .filter(col("batch_id") =!= col("index_id"))
-          // intra-batch near-dups: keep-first by id (pairs come id_a <
-          // id_b, so dropping every id_b keeps exactly the lowest id of
-          // each duplicate neighborhood)
-          val selfDups = Dedup.portableMinhashPairs(
-            batch, idCol, textCol, n, k, threshold)
-            .select(col("id_b").as(idCol)).distinct()
-          val survivors = batch
-            .join(hits.select(col("batch_id").as(idCol)).distinct(),
-              Seq(idCol), "left_anti")
-            .join(selfDups, Seq(idCol), "left_anti")
-            // the anti-join input is re-derived from the batch TWICE
-            // (write + append below): localCheckpoint pins one result so
-            // the two consumers can't diverge on a re-computed batch
-            .localCheckpoint(true)
-          survivors.write
-            .mode("overwrite")
-            .parquet(s"$destDir/batch=$batchId")
-          Dedup.appendToMinhashIndex(spark, indexTable, survivors, idCol, textCol, n, k)
-          // release this batch's signature cache (persistOnce'd inside
-          // the index check) — a perpetual stream must not accumulate
-          // one cache entry per micro-batch forever
-          org.apache.spark.sql.graftbridge.CacheBridge.uncache(
-            Dedup.portableMinhashSignatures(batch, idCol, textCol, n, k))
-        }
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    startNearDupIngest(cleaned, destDir, checkpointDir, indexTable, idCol, trigger)(
+      (spark, batch) => Dedup.portableMinhashPairsAgainstIndex(
+        spark, indexTable, batch, idCol, textCol, n, k, threshold),
+      batch => Dedup.portableMinhashPairs(batch, idCol, textCol, n, k, threshold),
+      (spark, survivors) =>
+        Dedup.appendToMinhashIndex(spark, indexTable, survivors, idCol, textCol, n, k),
+      batch => Dedup.portableMinhashSignatures(batch, idCol, textCol, n, k))
 
   /** [[startWithIndex]]'s contract for BINARY media: each micro-batch's
     * payloads are perceptually fingerprinted (dHash), collided against
     * the persisted signature index ([[Multimodal.imagePairsAgainstIndex]],
     * same-id hits excluded for replay safety) AND against themselves
     * ([[Multimodal.imageNearDupPairs]], keep-first by id), colliders
-    * drop, survivors land in the idempotent `batch=<id>` sink and
+    * drop, survivors land through the epoch sink and
     * their band rows append so the NEXT epoch sees them. Payloads no
     * parser accepts pass through UNDEDUPED — no fingerprint means no
     * identity claim; junk filtering is an upstream policy, silent
@@ -526,7 +444,7 @@ object CorpusIngest {
       maxHamming: Int = 3,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery =
-    startPerceptualIngest(media, destDir, checkpointDir, idCol, trigger)(
+    startNearDupIngest(media, destDir, checkpointDir, indexTable, idCol, trigger)(
       (spark, batch) => Multimodal.imagePairsAgainstIndex(
         spark, indexTable, batch, idCol, binCol, maxHamming),
       batch => Multimodal.imageNearDupPairs(batch, idCol, binCol, maxHamming),
@@ -548,7 +466,7 @@ object CorpusIngest {
       canonicalRate: Int = 8000,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery =
-    startPerceptualIngest(media, destDir, checkpointDir, idCol, trigger)(
+    startNearDupIngest(media, destDir, checkpointDir, indexTable, idCol, trigger)(
       (spark, batch) => Multimodal.audioPairsAgainstIndex(
         spark, indexTable, batch, idCol, binCol, maxHamming,
         canonicalRate = canonicalRate),
@@ -559,8 +477,8 @@ object CorpusIngest {
       batch => Multimodal.audioProbeBandRows(batch, idCol, binCol, canonicalRate))
 
   /** Streaming maintenance of the LEXICAL index family: each
-    * micro-batch of accepted documents lands in the idempotent
-    * `batch=<id>` sink and is appended to the persisted BM25 index —
+    * micro-batch of accepted documents lands through the epoch sink
+    * and is appended to the persisted BM25 index —
     * postings, roster, and (when the corpus serves incremental
     * cosine) the `_norms` sidecar under the FROZEN `_terms` snapshot,
     * all through [[TextAnalysis.appendToBm25Index]]'s ordered
@@ -598,37 +516,17 @@ object CorpusIngest {
       textCol: String = "text",
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
-    ensureDest(docs, destDir)
-    val session = docs.sparkSession
-    TextAnalysis.repairBm25Index(session, indexTable)
-    if (session.catalog.tableExists(indexTable + "_norms"))
-      TextAnalysis.repairCosineNorms(session, indexTable)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val pinned = batch.localCheckpoint(true)
-          pinned.write.mode("overwrite").parquet(s"$destDir/batch=$batchId")
-          TextAnalysis.appendToBm25Index(spark, indexTable, pinned, idCol, textCol)
-          // the micro-batch runs in the stream's CLONED session, whose
-          // refreshTable cannot invalidate the OWNER session's table
-          // relation cache — refresh it here so the session that
-          // started the stream serves post-epoch retrieval without the
-          // external-writer stale-cache footgun (any OTHER session
-          // still follows the standard Spark rule: refreshTable before
-          // reading behind an external writer)
-          Seq(indexTable, indexTable + "_docs", indexTable + "_norms")
-            .filter(session.catalog.tableExists)
-            .foreach(session.catalog.refreshTable)
-        }
-      }
-      .start()
+    repairLexical(docs.sparkSession, indexTable)
+    EpochSink.startFlat(docs, destDir, checkpointDir, trigger) { (batch, batchId) =>
+      val pinned = batch.localCheckpoint(true)
+      EpochSink.land(pinned, destDir, batchId)
+      TextAnalysis.appendToBm25Index(batch.sparkSession, indexTable, pinned, idCol, textCol)
+      lexicalTables(indexTable)
+    }
   }
 
   /** Streaming maintenance of a PCA projector: every micro-batch lands
-    * in the idempotent `batch=<id>` sink and appends ONE bounded
+    * through the epoch sink and appends ONE bounded
     * moments row ([[graft.operators.Pca.appendMoments]]) keyed by the
     * EPOCH id — Structured Streaming replays an epoch under the same
     * id, and [[graft.operators.Pca.fitFromMoments]] keeps one row per
@@ -646,24 +544,14 @@ object CorpusIngest {
       dim: Int,
       vecCol: String = "embedding",
       trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery = {
-    ensureDest(vecs, destDir)
-    val session = vecs.sparkSession
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val pinned = batch.localCheckpoint(true)
-          pinned.write.mode("overwrite").parquet(s"$destDir/batch=$batchId")
-          graft.operators.Pca.appendMoments(
-            pinned, vecCol, dim, batchId, momentsTable)
-          if (session.catalog.tableExists(momentsTable))
-            session.catalog.refreshTable(momentsTable)
-        }
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    EpochSink.startFlat(vecs, destDir, checkpointDir, trigger) { (batch, batchId) =>
+      val pinned = batch.localCheckpoint(true)
+      EpochSink.land(pinned, destDir, batchId)
+      graft.operators.Pca.appendMoments(
+        pinned, vecCol, dim, batchId, momentsTable)
+      Seq(momentsTable)
+    }
 
   /** The COMPOSED acceptance funnel — the whole production ingest as
     * one streaming verb: every micro-batch runs
@@ -677,7 +565,7 @@ object CorpusIngest {
     *     excluded — the replay rule), then intra-batch keep-first
     *     (drop any doc with a smaller-id collider) —
     *     [[startWithIndex]]'s stages;
-    *  4. survivors land in the idempotent `batch=<id>` sink, their
+    *  4. survivors land through the epoch sink, their
     *     signatures append to the MinHash index, and (when
     *     `bm25Table` is set) the lexical index + norms sidecar stay
     *     current — [[startLexicalIngest]]'s stage, restart repairs
@@ -770,18 +658,14 @@ object CorpusIngest {
     // (r19: the caller contract is ENFORCED, not just documented —
     // every index probe and append below passes this and the stamped
     // surface refuses NAMED on a mismatch; see graft.operators.NormForm)
-    val normFormStamp = normalizeForm.getOrElse("NONE")
+    val normFormStamp = normalizeForm.getOrElse(NormForm.Default)
     // The semantic decontamination arm (the startDecontaminated option,
     // here inside the full funnel): when `embeddingTable` names a
     // persisted embedding-band surface, each micro-batch's vectors band
     // against the stored benchmark rows AFTER the lexical bloom screen —
     // paraphrase-level leakage shares embeddings, not shingles. Same
     // per-epoch table re-read contract; suite appends gate next batch.
-    embeddingTable.foreach { _ =>
-      require(docs.columns.contains(embVecCol),
-        s"semantic decontamination needs the stream to carry '$embVecCol'")
-    }
-    ensureDest(docs, destDir)
+    val semScreen = semanticFlags(docs, embeddingTable, idCol, embVecCol, embThreshold)
     val session = docs.sparkSession
     // register-FIRST (the Takedown wrappers' crash contract: a death
     // in between leaves a phantom, vacuously-clean registration —
@@ -806,95 +690,68 @@ object CorpusIngest {
         session, corpus, "embband", t, embVecCol, registryTable,
         provenance = "benchmark"))
     }
-    bm25Table.foreach { t =>
-      TextAnalysis.repairBm25Index(session, t)
-      if (session.catalog.tableExists(t + "_norms"))
-        TextAnalysis.repairCosineNorms(session, t)
-    }
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          import spark.implicits._
-          val staged = batch.localCheckpoint(true)
-          val nIn = staged.count()
-          // cheap projection over the pinned batch — not re-pinned;
-          // every downstream stage reads the normalized text
-          val pinned = normalizeForm match {
-            case Some(form) => staged.withColumn(textCol,
-              graft.operators.Corpus.normalizeText(col(textCol), form))
-            case None => staged
-          }
-          val quality = pinned
-            .filter(TextAnalysis.qualityScore(col(textCol)) >= minQuality &&
-              TextAnalysis.wordRepetitionRatio(col(textCol)) <= maxWordRep)
-            .localCheckpoint(true)
-          val nQ = quality.count()
-          val clean = bloomTable match {
-            case Some(bt) =>
-              val flagged = graft.operators.Corpus
-                .bloomDecontaminationFromIndex(quality, idCol, textCol, bt,
-                  normForm = normFormStamp)
-                .filter(col("flagged")).select(idCol)
-              quality.join(flagged, Seq(idCol), "left_anti").localCheckpoint(true)
-            case None => quality
-          }
-          val nC = clean.count()
-          // the semantic screen runs on the lexically-clean survivors:
-          // each stage's count is the docs the PREVIOUS stages passed
-          val semClean = embeddingTable match {
-            case Some(tbl) =>
-              val semFlagged = graft.operators.Corpus
-                .embeddingDecontaminationFromIndex(
-                  clean, idCol, embVecCol, tbl, embThreshold)
-                .filter(col("contaminated")).select(idCol)
-              clean.join(semFlagged, Seq(idCol), "left_anti")
-                .localCheckpoint(true)
-            case None => clean
-          }
-          val nS = semClean.count()
-          val hits = Dedup.portableMinhashPairsAgainstIndex(
-            spark, minhashTable, semClean, idCol, textCol, n, k, threshold,
-            normForm = normFormStamp)
-            .filter(col("batch_id") =!= col("index_id"))
-            .select(col("batch_id").as(idCol)).distinct()
-          val noHist = semClean.join(hits, Seq(idCol), "left_anti")
-            .localCheckpoint(true)
-          val nH = noHist.count()
-          val selfDups = Dedup.portableMinhashPairs(
-            semClean, idCol, textCol, n, k, threshold)
-            .select(col("id_b").as(idCol)).distinct()
-          val survivors = noHist.join(selfDups, Seq(idCol), "left_anti")
-            .localCheckpoint(true)
-          val nOut = survivors.count()
-          survivors.write.mode("overwrite").parquet(s"$destDir/batch=$batchId")
-          Dedup.appendToMinhashIndex(
-            spark, minhashTable, survivors, idCol, textCol, n, k,
-            normForm = normFormStamp)
-          bm25Table.foreach { t =>
-            TextAnalysis.appendToBm25Index(spark, t, survivors, idCol, textCol,
-              normForm = normFormStamp)
-          }
-          Seq((nIn, nIn - nQ, nQ - nC, nC - nS, nS - nH, nH - nOut, nOut))
-            .toDF("docs_in", "low_quality", "contaminated",
-              "contaminated_semantic", "dup_history", "dup_batch", "accepted")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"${destDir}_curate_log/batch=$batchId")
-          // per-epoch cache hygiene: the survivors-side signature frame
-          // serves both the history probe and the intra-batch pairs
-          org.apache.spark.sql.graftbridge.CacheBridge.uncache(
-            Dedup.portableMinhashSignatures(semClean, idCol, textCol, n, k))
-          // the owner session's table caches go stale behind the
-          // stream's cloned session — the startLexicalIngest rule
-          (minhashTable +: bm25Table.toSeq.flatMap(t =>
-            Seq(t, t + "_docs", t + "_norms")))
-            .filter(session.catalog.tableExists)
-            .foreach(session.catalog.refreshTable)
-        }
+    bm25Table.foreach(repairLexical(session, _))
+    EpochSink.startFlat(docs, destDir, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val staged = batch.localCheckpoint(true)
+      val nIn = staged.count()
+      // cheap projection over the pinned batch — not re-pinned;
+      // every downstream stage reads the normalized text
+      val pinned = normalizeForm match {
+        case Some(form) => staged.withColumn(textCol,
+          graft.operators.Corpus.normalizeText(col(textCol), form))
+        case None => staged
       }
-      .start()
+      val quality = pinned
+        .filter(TextAnalysis.qualityScore(col(textCol)) >= minQuality &&
+          TextAnalysis.wordRepetitionRatio(col(textCol)) <= maxWordRep)
+        .localCheckpoint(true)
+      val nQ = quality.count()
+      val clean = bloomTable match {
+        case Some(bt) =>
+          val flagged = bloomFlags(quality, idCol, textCol, bt, normFormStamp)
+          quality.join(flagged, Seq(idCol), "left_anti").localCheckpoint(true)
+        case None => quality
+      }
+      val nC = clean.count()
+      // the semantic screen runs on the lexically-clean survivors:
+      // each stage's count is the docs the PREVIOUS stages passed
+      val semClean = semScreen match {
+        case Some(flags) =>
+          clean.join(flags(clean), Seq(idCol), "left_anti")
+            .localCheckpoint(true)
+        case None => clean
+      }
+      val nS = semClean.count()
+      val hits = historyDups(Dedup.portableMinhashPairsAgainstIndex(
+        spark, minhashTable, semClean, idCol, textCol, n, k, threshold,
+        normForm = normFormStamp), idCol)
+      val noHist = semClean.join(hits, Seq(idCol), "left_anti")
+        .localCheckpoint(true)
+      val nH = noHist.count()
+      val selfDups = batchDups(Dedup.portableMinhashPairs(
+        semClean, idCol, textCol, n, k, threshold), idCol)
+      val survivors = noHist.join(selfDups, Seq(idCol), "left_anti")
+        .localCheckpoint(true)
+      val nOut = survivors.count()
+      EpochSink.land(survivors, destDir, batchId)
+      Dedup.appendToMinhashIndex(
+        spark, minhashTable, survivors, idCol, textCol, n, k,
+        normForm = normFormStamp)
+      bm25Table.foreach { t =>
+        TextAnalysis.appendToBm25Index(spark, t, survivors, idCol, textCol,
+          normForm = normFormStamp)
+      }
+      writeAudit(spark, destDir, "curate", batchId,
+        "docs_in" -> nIn, "low_quality" -> (nIn - nQ), "contaminated" -> (nQ - nC),
+        "contaminated_semantic" -> (nC - nS), "dup_history" -> (nS - nH),
+        "dup_batch" -> (nH - nOut), "accepted" -> nOut)
+      // per-epoch cache hygiene: the survivors-side signature frame
+      // serves both the history probe and the intra-batch pairs
+      CacheBridge.uncache(
+        Dedup.portableMinhashSignatures(semClean, idCol, textCol, n, k))
+      minhashTable +: bm25Table.toSeq.flatMap(lexicalTables)
+    }
   }
 
   /** [[startImageIngest]] for VIDEO clips — the per-bit-majority
@@ -911,7 +768,7 @@ object CorpusIngest {
       maxFrames: Int = 8,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery =
-    startPerceptualIngest(media, destDir, checkpointDir, idCol, trigger)(
+    startNearDupIngest(media, destDir, checkpointDir, indexTable, idCol, trigger)(
       (spark, batch) => Multimodal.videoPairsAgainstIndex(
         spark, indexTable, batch, idCol, binCol, maxHamming,
         maxFrames = maxFrames),
@@ -921,53 +778,115 @@ object CorpusIngest {
         spark, indexTable, survivors, idCol, binCol, maxFrames),
       batch => Multimodal.videoProbeBandRows(batch, idCol, binCol, maxFrames))
 
-  /** The shared perceptual-ingest foreachBatch: one implementation,
-    * three modalities — the same replay/idempotence/cache-hygiene
-    * contract as [[startWithIndex]], with (batch_id, index_id) /
-    * (id_a, id_b) collision frames supplied by the modality.
+  /** The shared near-dup ingest body: one implementation, four
+    * fingerprint families (MinHash text, image, audio, video) — the
+    * replay/idempotence/cache-hygiene contract of [[startWithIndex]],
+    * with (batch_id, index_id) / (id_a, id_b) collision frames, the
+    * index append and the probe-side cache frame supplied by the
+    * family.
     */
-  private def startPerceptualIngest(
-      media: DataFrame,
+  private def startNearDupIngest(
+      stream: DataFrame,
       destDir: String,
       checkpointDir: String,
+      indexTable: String,
       idCol: String,
       trigger: Trigger
   )(indexHits: (SparkSession, DataFrame) => DataFrame,
     selfPairs: DataFrame => DataFrame,
     appendIndex: (SparkSession, DataFrame) => Unit,
-    probeCacheFrame: DataFrame => DataFrame): StreamingQuery = {
-    ensureDest(media, destDir)
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          // same-id exclusion = the startWithIndex replay rule: a
-          // replayed batch re-encounters its own appended signatures
-          val hits = indexHits(spark, batch)
-            .filter(col("batch_id") =!= col("index_id"))
-          // intra-batch rule: pairs come id_a < id_b, and ANY doc with
-          // a smaller-id collider is dropped — deterministic, but note
-          // it is neither greedy-sequential nor connected-component
-          // semantics (chain A<B<C with pairs (A,B),(B,C) keeps A
-          // only: C drops for colliding with the already-dropped B)
-          val selfDups = selfPairs(batch)
-            .select(col("id_b").as(idCol)).distinct()
-          val survivors = batch
-            .join(hits.select(col("batch_id").as(idCol)).distinct(),
-              Seq(idCol), "left_anti")
-            .join(selfDups, Seq(idCol), "left_anti")
-            .localCheckpoint(true)
-          survivors.write
-            .mode("overwrite")
-            .parquet(s"$destDir/batch=$batchId")
-          appendIndex(spark, survivors)
-          // one batch's probe cache at a time, never one per epoch
-          org.apache.spark.sql.graftbridge.CacheBridge.uncache(
-            probeCacheFrame(batch))
-        }
-      }
-      .start()
+    probeCacheFrame: DataFrame => DataFrame): StreamingQuery =
+    EpochSink.startFlat(stream, destDir, checkpointDir, trigger) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val hits = historyDups(indexHits(spark, batch), idCol)
+      val selfDups = batchDups(selfPairs(batch), idCol)
+      val survivors = batch
+        .join(hits, Seq(idCol), "left_anti")
+        .join(selfDups, Seq(idCol), "left_anti")
+        // the anti-join input is re-derived from the batch TWICE
+        // (land + append below): localCheckpoint pins one result so
+        // the two consumers can't diverge on a re-computed batch
+        .localCheckpoint(true)
+      EpochSink.land(survivors, destDir, batchId)
+      appendIndex(spark, survivors)
+      // release this batch's probe cache (persistOnce'd inside the
+      // index check) — a perpetual stream must hold one batch's cache
+      // at a time, never one entry per micro-batch forever
+      CacheBridge.uncache(probeCacheFrame(batch))
+      Seq(indexTable)
+    }
+
+  /** The batch ids an index probe's (batch_id, index_id) hits collide
+    * with. Same-id hits are EXCLUDED — the replay rule of
+    * [[startWithIndex]]: a replayed batch re-encounters its own
+    * appended signatures.
+    */
+  private def historyDups(hits: DataFrame, idCol: String): DataFrame =
+    hits.filter(col("batch_id") =!= col("index_id"))
+      .select(col("batch_id").as(idCol)).distinct()
+
+  /** The intra-batch rule over (id_a, id_b) pairs: pairs come id_a <
+    * id_b, and ANY doc with a smaller-id collider is dropped, so
+    * dropping every id_b keeps the lowest id of each duplicate
+    * neighborhood — deterministic, but note it is neither
+    * greedy-sequential nor connected-component semantics (chain A<B<C
+    * with pairs (A,B),(B,C) keeps A only: C drops for colliding with
+    * the already-dropped B).
+    */
+  private def batchDups(pairs: DataFrame, idCol: String): DataFrame =
+    pairs.select(col("id_b").as(idCol)).distinct()
+
+  /** The ids of `frame` the persisted bloom index flags. */
+  private def bloomFlags(frame: DataFrame, idCol: String, textCol: String,
+      bloomTable: String, normForm: String): DataFrame =
+    Corpus.bloomDecontaminationFromIndex(frame, idCol, textCol, bloomTable,
+      normForm = normForm)
+      .filter(col("flagged")).select(idCol)
+
+  /** The semantic screen's per-epoch flag builder when `embeddingTable`
+    * is set: the ids of a frame whose `embVecCol` vectors hit the
+    * persisted embedding-band surface at ≥ `embThreshold`. The stream
+    * is checked for `embVecCol` HERE, before it starts — a missing
+    * column must fail at start, not inside micro-batch N.
+    */
+  private def semanticFlags(stream: DataFrame, embeddingTable: Option[String], idCol: String,
+      embVecCol: String, embThreshold: Double): Option[DataFrame => DataFrame] =
+    embeddingTable.map { tbl =>
+      require(stream.columns.contains(embVecCol),
+        s"semantic decontamination needs the stream to carry '$embVecCol'")
+      frame => Corpus.embeddingDecontaminationFromIndex(
+        frame, idCol, embVecCol, tbl, embThreshold)
+        .filter(col("contaminated")).select(idCol)
+    }
+
+  /** Restart recovery of a streamed BM25 index (see
+    * [[startLexicalIngest]]): heal both crash windows once, before the
+    * stream attaches.
+    */
+  private def repairLexical(spark: SparkSession, table: String): Unit = {
+    TextAnalysis.repairBm25Index(spark, table)
+    if (spark.catalog.tableExists(table + "_norms"))
+      TextAnalysis.repairCosineNorms(spark, table)
   }
+
+  /** The catalog tables a BM25 append writes: postings, roster, norms. */
+  private def lexicalTables(table: String): Seq[String] =
+    Seq(table, table + "_docs", table + "_norms")
+
+  /** One epoch's audit record: a one-row frame of named counts at
+    * `<destDir>_<name>_log/batch=<id>`, overwrite-idempotent like the
+    * data epoch.
+    */
+  private def writeAudit(spark: SparkSession, destDir: String, name: String, batchId: Long,
+      counts: (String, Long)*): Unit =
+    spark.range(1).select(counts.map { case (c, v) => lit(v).as(c) }: _*)
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"${destDir}_${name}_log/batch=$batchId")
+
+  /** The `<destDir>_<name>_log` audit records of every epoch, read
+    * through mergeSchema (see [[decontamLog]]).
+    */
+  private def auditLog(spark: SparkSession, destDir: String, name: String): DataFrame =
+    spark.read.option("mergeSchema", "true")
+      .parquet(s"${destDir}_${name}_log")
 }

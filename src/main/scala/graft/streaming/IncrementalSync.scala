@@ -56,7 +56,8 @@ object IncrementalSync {
       .dropDuplicatesWithinWatermark(idCol)
 
   /** Start the incremental sync: append new source rows into the
-    * destination, one idempotent parquet directory per micro-batch.
+    * destination, one idempotent parquet directory per micro-batch
+    * (the epoch-sink contract of [[CorpusIngest]]'s object doc).
     * `Trigger.AvailableNow` drains whatever is present then stops —
     * cron-friendly incremental catch-up; pass a processing-time trigger
     * for continuous tailing.
@@ -67,13 +68,8 @@ object IncrementalSync {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write
-          .mode("overwrite") // idempotent on micro-batch replay
-          .parquet(s"$destDir/batch=$batchId")
-      }
-      .start()
+    EpochSink.startFlat(events, destDir, checkpointDir, trigger) { (batch, batchId) =>
+      EpochSink.land(batch, destDir, batchId)
+      Nil
+    }
 }

@@ -217,7 +217,8 @@ object Takedown {
 
   /** Side-table suffixes of the index families — every family's
     * [[graft.plans.Tombstones]] table plus the sides its row names.
-    * Strict-mode discovery skips them: their base table is the surface.
+    * Strict-mode discovery skips a side whose base table exists: the
+    * base is the surface.
     */
   private val SideSuffixes: Seq[String] =
     ("_tombstones" +: IndexFamilies.values.toSeq.flatMap(_.sides)).distinct
@@ -651,7 +652,10 @@ object Takedown {
     * appear in NO registry row, restricted to those still holding at
     * least one of `ids` — the forgotten-surface list [[sweep]]'s
     * strict mode refuses on. Side tables (`_tombstones`, `_docs`, …)
-    * are skipped: their base table is the surface. One bounded
+    * are skipped when their base table (the name minus the suffix) is
+    * itself a catalog table: the base is the surface. A name that
+    * merely ENDS in a side suffix with no such base (a forgotten index
+    * called `crawl_docs`) is sniffed like any other table. One bounded
     * `limit(1)` semi-probe per candidate.
     */
   def discoverUnregistered(
@@ -661,9 +665,14 @@ object Takedown {
       idsCol: String): Seq[String] = {
     val known = spark.table(registryTable).select("surface").distinct()
       .collect().map(_.getString(0).toLowerCase).toSet + registryTable.toLowerCase
-    spark.catalog.listTables().collect().map(_.name).toSeq.sorted
+    val tables = spark.catalog.listTables().collect().map(_.name).toSeq.sorted
+    val present = tables.map(_.toLowerCase).toSet
+    tables
       .filterNot(n => known.contains(n.toLowerCase))
-      .filterNot(n => SideSuffixes.exists(n.toLowerCase.endsWith))
+      .filterNot { n =>
+        val lower = n.toLowerCase
+        SideSuffixes.exists(s => lower.endsWith(s) && present(lower.dropRight(s.length)))
+      }
       .flatMap { n =>
         val cols = scala.util.Try(spark.table(n).columns.toSeq).getOrElse(Seq.empty)
         val idc = IndexFamilies.values.find(_.layout(cols)).map(_.idCol)

@@ -577,22 +577,105 @@ class CorpusIngestSpec extends SparkSpec {
   }
 
   test("a stream with zero survivors still leaves a readable empty dataset") {
+    type Verb = (org.apache.spark.sql.DataFrame, String, String) =>
+      org.apache.spark.sql.streaming.StreamingQuery
     val srcDir = tmp("graft_ingest_src_empty")
     writeMain(srcDir)
-    val outDir = tmp("graft_ingest_empty_out")
-    // an unreachable quality bar drops every row: each micro-batch is
-    // empty and skips its write, so only the batch=-1 schema sentinel
-    // stands between the reader and path-not-found
-    val cleaned = CorpusIngest.clean(
-      CorpusIngest.documentsStream(spark, srcDir), minQuality = 1e9,
-      watermark = "1 hour")
-    CorpusIngest.start(cleaned, outDir, tmp("graft_ingest_empty_ckpt"))
-      .awaitTermination(180000)
-    val back = spark.read.parquet(outDir)
-    assert(back.count() === 0)
-    // schema survives, so downstream joins/aggregations still resolve
-    assert(Seq("doc_id", "text", "fp").forall(back.columns.contains),
-      back.columns.mkString(","))
+    // the indexed verbs are pointed at real surfaces they must never touch
+    val history = table("documents").select("doc_id", "text").filter(col("doc_id") < 50)
+    Dedup.writeMinhashIndex(history, "doc_id", "text", "empty_mh_idx", buckets = 4)
+    TextAnalysis.writeBm25Index(history, "doc_id", "text", "empty_bm_idx", buckets = 4)
+    graft.operators.Corpus.writeBloomIndex(history, "text", "empty_bloom_idx", n = 4)
+    // every flat verb: the sentinel and the empty-batch guard are one sink's
+    val verbs: Seq[(String, Verb)] = Seq(
+      "start" -> ((s, out, ckpt) => CorpusIngest.start(s, out, ckpt)),
+      "startWithIndex" -> ((s, out, ckpt) =>
+        CorpusIngest.startWithIndex(s, out, ckpt, "empty_mh_idx")),
+      "startLexicalIngest" -> ((s, out, ckpt) =>
+        CorpusIngest.startLexicalIngest(s, out, ckpt, "empty_bm_idx")),
+      "startDecontaminated" -> ((s, out, ckpt) => CorpusIngest.startDecontaminated(
+        s, out, ckpt, "doc_id", "text", "empty_bloom_idx")),
+      "startCuratedIngest" -> ((s, out, ckpt) =>
+        CorpusIngest.startCuratedIngest(s, out, ckpt, "empty_mh_idx")),
+      "IncrementalSync.start" -> ((s, out, ckpt) => IncrementalSync.start(s, out, ckpt)))
+    verbs.foreach { case (verb, run) =>
+      val outDir = tmp("graft_ingest_empty_out")
+      // an unreachable quality bar drops every row: each micro-batch is
+      // empty and skips its write, so only the batch=-1 schema sentinel
+      // stands between the reader and path-not-found
+      val cleaned = CorpusIngest.clean(
+        CorpusIngest.documentsStream(spark, srcDir), minQuality = 1e9,
+        watermark = "1 hour")
+      val q = run(cleaned, outDir, tmp("graft_ingest_empty_ckpt"))
+      q.awaitTermination(180000)
+      assert(q.exception.isEmpty, s"$verb: ${q.exception.map(_.toString).getOrElse("")}")
+      val back = spark.read.parquet(outDir)
+      assert(back.count() === 0, verb)
+      // schema survives, so downstream joins/aggregations still resolve
+      assert(Seq("doc_id", "text", "fp").forall(back.columns.contains),
+        s"$verb: ${back.columns.mkString(",")}")
+      // empty micro-batches write nothing: the sentinel is the only epoch
+      assert(new java.io.File(outDir).list().filter(_.startsWith("batch=")).toSeq
+        === Seq("batch=-1"), verb)
+    }
+  }
+
+  test("owner-session refresh: the session that started an indexed ingest reads the appended survivors with no refreshTable") {
+    import spark.implicits._
+    type Run = (String, String) => org.apache.spark.sql.streaming.StreamingQuery
+    def phrase(tag: String) = (1 to 25).map(t => s"${tag}w$t").mkString(" ")
+    // full-avalanche per-(image, pixel) grays — the image-ingest
+    // fixture rule: distinct images get decorrelated dHashes
+    def mix8(z0: Long): Int = {
+      var z = z0 * 0x9E3779B97F4A7C15L
+      z ^= (z >>> 33); z *= 0xFF51AFD7ED558CCDL; z ^= (z >>> 33)
+      (z & 0xffL).toInt
+    }
+    def img(d: Int): Array[Byte] = {
+      val px = new Array[Byte](9 * 8 * 3)
+      var o = 0
+      for (y <- 0 until 8; x <- 0 until 9) {
+        val v = mix8(x + 9L * y + 72L * d + 1).toByte
+        px(o) = v; px(o + 1) = v; px(o + 2) = v; o += 3
+      }
+      "P6\n9 8\n255\n".getBytes("US-ASCII") ++ px
+    }
+    def stream(df: org.apache.spark.sql.DataFrame) = {
+      val src = tmp("graft_own_src")
+      df.write.mode("overwrite").parquet(src)
+      spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    }
+    // (index, history build, the ingest) — every arrival is new
+    // content, so every arrival survives and appends
+    val cases: Seq[(String, () => Unit, Run)] = Seq(
+      ("own_mh_idx",
+        () => Dedup.writeMinhashIndex(
+          (0 until 3).map(i => (i.toLong, phrase(s"oh$i"))).toDF("doc_id", "text"),
+          "doc_id", "text", "own_mh_idx", buckets = 4),
+        (out, ckpt) => CorpusIngest.startWithIndex(
+          stream((0 until 5).map(i => (100L + i, phrase(s"on$i"))).toDF("doc_id", "text")),
+          out, ckpt, "own_mh_idx", threshold = 0.75)),
+      ("own_dh_idx",
+        () => graft.operators.Multimodal.writeDHashIndex(
+          (0 until 4).map(d => (d.toLong, img(d))).toDF("doc_id", "payload"),
+          "doc_id", "payload", "own_dh_idx", buckets = 4),
+        (out, ckpt) => CorpusIngest.startImageIngest(
+          stream((0 until 4).map(i => (100L + i, img(100 + 3 * i))).toDF("doc_id", "payload")),
+          out, ckpt, "own_dh_idx")))
+    cases.foreach { case (idx, build, run) =>
+      build()
+      // resolve the index in THIS session before the stream: its
+      // relation cache now holds the pre-stream file listing
+      val before = spark.table(idx).count()
+      val q = run(tmp("graft_own_out"), tmp("graft_own_ckpt"))
+      q.awaitTermination(180000)
+      assert(q.exception.isEmpty, s"$idx: ${q.exception.map(_.toString).getOrElse("")}")
+      // a fresh session lists the table's files anew: the ground truth
+      val fresh = spark.newSession().table(idx).count()
+      assert(fresh > before, s"$idx: the stream appended nothing")
+      assert(spark.table(idx).count() === fresh,
+        s"$idx: the starting session still reads the pre-stream index")
+    }
   }
 
   test("source rollup emits exactly the closed windows of the batch aggregation") {

@@ -134,21 +134,26 @@ class TakedownSpec extends SparkSpec {
     val imgs = imgFrame(40)
     // one FORGOTTEN surface per stored layout discovery recognizes:
     // built through the primitive verb, never registered — exactly the
-    // operational error the registry exists to catch
-    val layouts: Seq[(String, String => Unit)] = Seq(
-      "minhash" -> ((t: String) =>
+    // operational error the registry exists to catch. (case, family,
+    // write): the `crawl_docs` case is a minhash index whose NAME ends
+    // in a side-table suffix with no base table behind it — a surface
+    // in its own right, not a side table
+    val layouts: Seq[(String, String, String => Unit)] = Seq(
+      ("minhash", "minhash", (t: String) =>
         Dedup.writeMinhashIndex(docs, "doc_id", "text", t, buckets = 4)),
-      "bm25" -> ((t: String) =>
+      ("crawl_docs", "minhash", (t: String) =>
+        Dedup.writeMinhashIndex(docs, "doc_id", "text", t, buckets = 4)),
+      ("bm25", "bm25", (t: String) =>
         TextAnalysis.writeBm25Index(docs, "doc_id", "text", t, buckets = 4)),
-      "ivfsq" -> ((t: String) => Similarity.writeIvfSqIndex(emb, "doc_id",
+      ("ivfsq", "ivfsq", (t: String) => Similarity.writeIvfSqIndex(emb, "doc_id",
         "embedding", t, nCentroids = 4, buckets = 4)),
-      "ivfpq" -> ((t: String) => Similarity.writeIvfPqIndex(emb, "doc_id",
+      ("ivfpq", "ivfpq", (t: String) => Similarity.writeIvfPqIndex(emb, "doc_id",
         "embedding", t, nCentroids = 4, m = 4, nCodes = 8, buckets = 4)),
-      "dhash" -> ((t: String) =>
+      ("dhash", "dhash", (t: String) =>
         Multimodal.writeDHashIndex(imgs, "doc_id", "payload", t, buckets = 4)))
-    layouts.foreach { case (family, write) =>
+    layouts.foreach { case (name, family, write) =>
       // a corpus per layout: a completed sweep leaves no ids to refuse on
-      val (corpus, forgotten) = (s"tkd2_$family", s"tkd2_forgotten_$family")
+      val (corpus, forgotten) = (s"tkd2_$name", s"tkd2_forgotten_$name")
       val dir = tmp(s"graft_tkd2_$family")
       docs.write.parquet(dir)
       Takedown.registerCorpus(spark, corpus, dir, "doc_id", SharedReg)
@@ -158,17 +163,17 @@ class TakedownSpec extends SparkSpec {
           registryTable = SharedReg)
       }
       assert(e.getMessage.contains("UNREGISTERED") &&
-        e.getMessage.contains(forgotten), s"$family: ${e.getMessage}")
+        e.getMessage.contains(forgotten), s"$name: ${e.getMessage}")
       // nothing was touched: the refusal precedes every delete
-      assert(spark.read.parquet(dir).count() === 40L, family)
+      assert(spark.read.parquet(dir).count() === 40L, name)
       // register the forgotten surface -> the same sweep completes clean
       Takedown.register(spark, corpus, family, forgotten, registryTable = SharedReg)
       val audit = Takedown.sweep(spark, corpus, (col("doc_id") - Off) % 5 === 0,
         registryTable = SharedReg)
       val cols = audit.columns.filter(_.endsWith("_rows"))
-      assert(cols.contains(s"${family}_rows"), s"$family: ${cols.mkString(",")}")
-      assert(audit.count() === 8L, family)
-      assert(audit.filter(cols.map(col).reduce(_ + _) > 0).count() === 0L, family)
+      assert(cols.contains(s"${family}_rows"), s"$name: ${cols.mkString(",")}")
+      assert(audit.count() === 8L, name)
+      assert(audit.filter(cols.map(col).reduce(_ + _) > 0).count() === 0L, name)
     }
   }
 
