@@ -191,7 +191,9 @@ object Bench {
     // Derby engine — table DDL on first load, truncate + batched
     // INSERT, 4 tables in flight — then compareDb must verify every
     // table before the number counts. jdbc_sync = sync wall seconds
-    // (verify excluded); jdbc_rps = total synced rows / jdbc_sync.
+    // (verify excluded); jdbc_rps = total synced rows / jdbc_sync;
+    // jdbc_verify = the compareDb seconds of the same syncs (the
+    // reference publishes its compareDb at 11.31 s).
     // dev knob: SPARK_GRAFT_ONLY=<regex> probes a subset (e.g. one
     // query × many reps when chasing a bimodal timing); unset = full
     // suite. Parsed HERE because the per-bench extras below (two live
@@ -234,10 +236,10 @@ object Bench {
     // One timed sync of the 10-table fixture DB into a throwaway
     // on-disk Derby under `tag`: DDL on first load, truncate + batched
     // INSERT, 4 tables in flight, then compareDb must verify every
-    // table before the number counts. Returns (wall seconds, rows/s),
-    // (-1,-1) on any failure. Identical pipeline for every call below —
-    // the reported numbers must differ ONLY in engine durability and
-    // log placement.
+    // table before the number counts. Returns (sync wall seconds,
+    // rows/s, compareDb seconds), all -1 on any failure. Identical
+    // pipeline for every call below — the reported numbers must differ
+    // ONLY in engine durability and log placement.
     // logDevice (`scratch`): when set, the embedded engine's
     // transaction log goes to tmpfs (/dev/shm) while data pages stay
     // on disk. r17 ran the DURABLE headline that way and its advisor
@@ -260,7 +262,7 @@ object Bench {
       else None
     }
     def syncOnce(tag: String, props: java.util.Properties,
-        scratch: Option[String]): (Double, Double) = {
+        scratch: Option[String]): (Double, Double, Double) = {
       val dbDir = java.nio.file.Files.createTempDirectory(tag)
       val logDev = scratch.map(s => s";logDevice=$s/${dbDir.getFileName}")
         .getOrElse("")
@@ -274,11 +276,13 @@ object Bench {
         val results = m.run()
         val sec = (System.nanoTime() - t0) / 1e9
         val rows = results.filter(_.ok).map(_.rows).sum
+        val v0 = System.nanoTime()
         val allOk = results.nonEmpty && results.forall(_.ok) &&
           m.compare().filter(org.apache.spark.sql.functions.col("is_ok") === "NO")
             .count() == 0
-        if (allOk) (sec, rows / sec) else (-1.0, -1.0)
-      } catch { case _: Throwable => (-1.0, -1.0) }
+        val verifySec = (System.nanoTime() - v0) / 1e9
+        if (allOk) (sec, rows / sec, verifySec) else (-1.0, -1.0, -1.0)
+      } catch { case _: Throwable => (-1.0, -1.0, -1.0) }
       finally {
         org.apache.commons.io.FileUtils.deleteQuietly(dbDir.toFile)
         scratch.foreach(s => org.apache.commons.io.FileUtils.deleteQuietly(
@@ -299,14 +303,18 @@ object Bench {
     // db, DDL + truncate + batched INSERT + compareDb verification).
     // Log on DISK — every commit fsync reaches stable storage, so this
     // IS crash-durable and comparable to the reference's figure.
-    def median3Sync(tag: String, scratch: Option[String]): (Double, Double) = {
+    // The verify seconds take their own median over the same syncs.
+    def median3Sync(tag: String, scratch: Option[String]): (Double, Double, Double) = {
       val runs = (1 to 3)
         .map(_ => syncOnce(tag, new java.util.Properties(), scratch))
         .filter(_._1 > 0)
-      if (runs.isEmpty) (-1.0, -1.0)
-      else runs.sortBy(_._1).apply(runs.size / 2)
+      if (runs.isEmpty) (-1.0, -1.0, -1.0)
+      else {
+        val (sec, rps, _) = runs.sortBy(_._1).apply(runs.size / 2)
+        (sec, rps, runs.map(_._3).sorted.apply(runs.size / 2))
+      }
     }
-    val (jdbcSync, jdbcRps) = if (only.isDefined) (-1.0, -1.0)
+    val (jdbcSync, jdbcRps, jdbcVerify) = if (only.isDefined) (-1.0, -1.0, -1.0)
       else median3Sync("graft_bench_derby", None)
     // The same median-of-3 protocol with the transaction log on tmpfs
     // (r17's headline arm, now under its own key): the low-I/O-noise
@@ -595,6 +603,7 @@ object Bench {
       ",\"knnivf\":\"c16 p4 k7 sl32\",\"mhidx\":\"n3 k8 b8\"" +
       ",\"stream_lifecycle\":" + fmt(streamLifecycle) +
       ",\"jdbc_sync\":" + fmt(jdbcSync) +
+      ",\"jdbc_verify\":" + fmt(jdbcVerify) +
       ",\"jdbc_rps\":" + (if (jdbcRps < 0) "-1" else f"$jdbcRps%.0f") +
       // same pipeline, transaction log on tmpfs: pipeline-tracking, NOT
       // crash-durable (r17 reported this arm AS jdbc_sync; split per
@@ -656,6 +665,7 @@ object Bench {
       // soak's "every pinned bound has a measurement" assert
       ",\"bpe_cold\":" + fmt(bpeCold) +
       ",\"jdbc_sync\":" + fmt(jdbcSync) +
+      ",\"jdbc_verify\":" + fmt(jdbcVerify) +
       ",\"jdbc_rps\":" + (if (jdbcRps < 0) "-1" else f"$jdbcRps%.0f") +
       ",\"jdbc_sync_shmlog\":" + fmt(jdbcSyncShm) + "}"
     // Budget the queries map DYNAMICALLY against what the rest of the

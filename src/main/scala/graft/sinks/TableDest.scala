@@ -1,8 +1,10 @@
 package graft.sinks
 
+import scala.concurrent.duration.FiniteDuration
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{FixtureSource, TableSource}
+import graft.sources.{FixtureSource, JdbcSource, TableSource}
 
 /** The two identifier-quoting conventions the engine speaks, in ONE
   * place: write path, read-back path, and CLI must stay mutually
@@ -92,7 +94,8 @@ final case class JdbcDest(
     * writes used — otherwise `compareDb` crashes on engines without
     * the Oracle dictionary, or reads a differently-folded identifier
     * than the one written. Listing goes through the dialect-neutral
-    * JDBC `DatabaseMetaData.getTables` instead.
+    * JDBC `DatabaseMetaData.getTables` instead; the row count is one
+    * pushed `select count(*)` under the same `quoteIdent`.
     */
   def asSource: TableSource = new TableSource {
     override def tableNames(spark: SparkSession): Seq[String] = {
@@ -111,5 +114,8 @@ final case class JdbcDest(
     }
     override def table(spark: SparkSession, name: String): DataFrame =
       ArrayCarrier.unpack(spark.read.jdbc(url, quoteIdent(name), props))
+    override def rowCount(spark: SparkSession, name: String,
+        timeout: FiniteDuration): Long =
+      JdbcSource.pushedCount(url, props, quoteIdent(name), timeout)
   }
 }

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.concurrent.duration.FiniteDuration
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.plans.{EmptyScan, PartitionPlanner, ScanPlan}
 
@@ -12,6 +14,14 @@ trait TableSource {
 
   /** Whole-table scan as a DataFrame (lazy; no action). */
   def table(spark: SparkSession, name: String): DataFrame
+
+  /** Row count of one table. By default a Spark `count()` over [[table]],
+    * which leaves `timeout` to its caller (a job group to cancel, a
+    * thread to interrupt); JDBC sources override it with one
+    * `select count(*)` sent to the database under `timeout`.
+    */
+  def rowCount(spark: SparkSession, name: String, timeout: FiniteDuration): Long =
+    table(spark, name).count()
 
   /** Schema-only probe — the reference's `WHERE 1=0` trick
     * (cmd/root.go:277-279). In Spark a scan is lazy, so `limit(0)`
@@ -107,6 +117,9 @@ final case class JdbcSource(
   override def table(spark: SparkSession, name: String): DataFrame =
     spark.read.option("fetchsize", fetchSize.toString).jdbc(url, quoted(name), props)
 
+  override def rowCount(spark: SparkSession, name: String, timeout: FiniteDuration): Long =
+    JdbcSource.pushedCount(url, props, quoted(name), timeout)
+
   /** Partitioned scan from a precomputed [[ScanPlan]]. */
   def tablePartitioned(spark: SparkSession, name: String, plan: ScanPlan): DataFrame =
     plan match {
@@ -130,4 +143,36 @@ final case class JdbcSource(
     PartitionPlanner.plan(rows, pageSize, splitKey, maxParallel)
 
   private def quoted(name: String): String = "\"" + name + "\""
+}
+
+object JdbcSource {
+
+  /** `select count(*)` from one already-quoted table, sent from this
+    * JVM on a connection of its own — the reference's count
+    * (cmd/compare.go:112-123), with no Spark job. The statement's query
+    * timeout is `timeout` rounded up to whole seconds (at least one);
+    * the transaction is rolled back before the connection closes, so a
+    * count that fails or times out holds no locks afterwards.
+    */
+  private[graft] def pushedCount(
+      url: String,
+      props: java.util.Properties,
+      quotedName: String,
+      timeout: FiniteDuration): Long = {
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    try {
+      conn.setAutoCommit(false)
+      val st = conn.createStatement()
+      try {
+        st.setQueryTimeout(math.min(Int.MaxValue.toLong,
+          math.max(1L, (timeout.toMillis + 999) / 1000)).toInt)
+        val rs = st.executeQuery(s"select count(*) from $quotedName")
+        rs.next()
+        rs.getLong(1)
+      } finally st.close()
+    } finally {
+      try conn.rollback() catch { case _: java.sql.SQLException => () }
+      conn.close()
+    }
+  }
 }

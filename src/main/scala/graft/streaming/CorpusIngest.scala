@@ -707,22 +707,23 @@ object CorpusIngest {
           TextAnalysis.wordRepetitionRatio(col(textCol)) <= maxWordRep)
         .localCheckpoint(true)
       val nQ = quality.count()
-      val clean = bloomTable match {
+      // a screen that is off passes its input through, count included
+      val (clean, nC) = bloomTable match {
         case Some(bt) =>
           val flagged = bloomFlags(quality, idCol, textCol, bt, normFormStamp)
-          quality.join(flagged, Seq(idCol), "left_anti").localCheckpoint(true)
-        case None => quality
+          val c = quality.join(flagged, Seq(idCol), "left_anti").localCheckpoint(true)
+          (c, c.count())
+        case None => (quality, nQ)
       }
-      val nC = clean.count()
       // the semantic screen runs on the lexically-clean survivors:
       // each stage's count is the docs the PREVIOUS stages passed
-      val semClean = semScreen match {
+      val (semClean, nS) = semScreen match {
         case Some(flags) =>
-          clean.join(flags(clean), Seq(idCol), "left_anti")
+          val c = clean.join(flags(clean), Seq(idCol), "left_anti")
             .localCheckpoint(true)
-        case None => clean
+          (c, c.count())
+        case None => (clean, nC)
       }
-      val nS = semClean.count()
       val hits = historyDups(Dedup.portableMinhashPairsAgainstIndex(
         spark, minhashTable, semClean, idCol, textCol, n, k, threshold,
         normForm = normFormStamp), idCol)

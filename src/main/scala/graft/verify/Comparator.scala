@@ -19,18 +19,25 @@ object Comparator {
 
   /** One row per table: src_rows, dest_rows, dest_exists, is_ok.
     *
-    * Count jobs fan out across a bounded driver-side Future pool (the
-    * reference's `maxParallel` goroutine fan-out, cmd/compare.go:60-68)
-    * — Spark's scheduler interleaves the concurrent jobs, so hundreds of
-    * small tables don't serialize behind each other on the driver.
+    * Each side counts through [[TableSource.rowCount]]: a JDBC source or
+    * destination answers one pushed `select count(*)` (the reference's
+    * own count, cmd/compare.go:112-123) with no Spark job; any other
+    * source runs a Spark `count()`. Tables fan out across a bounded
+    * driver-side thread pool (the reference's `maxParallel` goroutine
+    * fan-out, cmd/compare.go:60-68), so hundreds of small tables don't
+    * serialize behind each other on the driver.
     *
     * `timeout` bounds the WHOLE comparison from call start: a table
     * whose counts haven't landed by the deadline yields a
     * `dest_is_exist=TIMEOUT, is_ok=NO` failure row (picked up by
-    * [[failures]]) and its Spark jobs are cancelled via its job group —
-    * one hung destination connection degrades to one failure row
+    * [[failures]]) — one hung connection degrades to one failure row
     * instead of hanging verification forever (the reference at least
     * dies with the process; an `Await(Duration.Inf)` here did not).
+    * Both count kinds stop near the deadline: a pushed count runs with
+    * the time left as its statement's query timeout, a Spark count runs
+    * under a job group per table that the deadline cancels, and the
+    * deadline interrupts the table's pool thread either way (Derby, for
+    * one, checks the query timeout between rows, not in a lock wait).
     */
   def compareCounts(
       spark: SparkSession,
@@ -42,8 +49,7 @@ object Comparator {
         scala.concurrent.duration.FiniteDuration(30, "min")
   ): DataFrame = {
     import spark.implicits._
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
+    import java.util.concurrent.{Callable, ExecutionException, TimeUnit, TimeoutException}
     val destTables = dest.tableNames(spark).map(_.toLowerCase).toSet
     // daemon threads: a table whose scan never returns keeps its thread
     // hung past our deadline — it must not also pin the JVM open
@@ -54,38 +60,43 @@ object Comparator {
         th.setDaemon(true)
         th
       })
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     def tag(t: String) = s"graft-compare-$t"
     // side-channel for facts that landed before a table's deadline: a
     // timed-out row still reports its real source count when the source
     // scan finished and only the destination hung
     val srcCounts = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
     val deadline = System.nanoTime() + timeout.toNanos
+    def left() = scala.concurrent.duration.Duration.fromNanos(
+      math.max(0L, deadline - System.nanoTime()))
     val rows =
       try {
         val futs = tables.map { t =>
-          t -> Future {
-            // job group per table, from the pool thread (local
-            // properties are thread-inherited): a timeout can then
-            // cancel THIS table's running jobs without touching the
-            // others sharing the session
-            spark.sparkContext.setJobGroup(tag(t), s"compareCounts $t",
-              interruptOnCancel = true)
-            try {
-              val srcN = src.table(spark, t).count()
-              srcCounts.put(t, srcN)
-              val exists = destTables.contains(t.toLowerCase)
-              val destN = if (exists) Some(dest.table(spark, t).count()) else None
-              (t, srcN, destN, if (exists) "YES" else "NO")
-            } finally spark.sparkContext.clearJobGroup()
-          }
+          t -> pool.submit(new Callable[(String, Long, Option[Long], String)] {
+            def call() = {
+              // job group per table, from the pool thread (local
+              // properties are thread-inherited): a timeout can then
+              // cancel THIS table's running jobs without touching the
+              // others sharing the session
+              spark.sparkContext.setJobGroup(tag(t), s"compareCounts $t",
+                interruptOnCancel = true)
+              try {
+                val srcN = src.rowCount(spark, t, left())
+                srcCounts.put(t, srcN)
+                val exists = destTables.contains(t.toLowerCase)
+                val destN = if (exists) Some(dest.rowCount(spark, t, left())) else None
+                (t, srcN, destN, if (exists) "YES" else "NO")
+              } finally spark.sparkContext.clearJobGroup()
+            }
+          })
         }
         futs.map { case (t, f) =>
-          val remaining = deadline - System.nanoTime()
-          try Await.result(f,
-            if (remaining > 0) Duration.fromNanos(remaining) else Duration.Zero)
+          try f.get(left().toNanos, TimeUnit.NANOSECONDS)
           catch {
-            case _: java.util.concurrent.TimeoutException =>
+            case e: ExecutionException => throw e.getCause
+            case _: TimeoutException =>
+              // the interrupt ends a pushed count the database keeps
+              // waiting on (a lock wait outlasts a query timeout)
+              f.cancel(true)
               spark.sparkContext.cancelJobGroup(tag(t))
               val partialSrc = Option(srcCounts.get(t)).fold(-1L)(_.longValue)
               (t, partialSrc, Option.empty[Long], "TIMEOUT")
@@ -439,15 +450,29 @@ object Comparator {
     }
   }
 
-  /** Deep compare of one table on both sides via [[checksum]]. */
+  /** Deep compare of one table on both sides via [[checksum]].
+    *
+    * The two sides run at the same time: the destination's checksum job
+    * on a thread this call starts, the source's on the calling thread.
+    * The new thread inherits the caller's Spark local properties, so
+    * both jobs run under the caller's job group and cancelling that
+    * group cancels both. The call waits for both sides and rethrows the
+    * failure of either, the source's first.
+    */
   def compareChecksums(
       spark: SparkSession,
       src: TableSource,
       dest: TableSource,
       table: String
   ): Boolean = {
-    val s = checksum(src.table(spark, table)).collect()(0)
-    val d = checksum(dest.table(spark, table)).collect()(0)
+    def side(ts: TableSource) = checksum(ts.table(spark, table)).collect()(0)
+    val destSide = new java.util.concurrent.FutureTask(() => side(dest))
+    val th = new Thread(destSide, s"graft-checksum-$table")
+    th.setDaemon(true)
+    th.start()
+    val s = try side(src) finally th.join()
+    val d = try destSide.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
     s == d
   }
 }

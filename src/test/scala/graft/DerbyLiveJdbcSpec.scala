@@ -228,4 +228,130 @@ class DerbyLiveJdbcSpec extends SparkSpec {
       batchRowSize = 500, maxConnections = 4)
     assert(backChecksum() === good)
   }
+
+  // A live JdbcSource → JdbcDest sync for the verification specs below:
+  // the source holds the non-vector fixture tables (loaded through the
+  // production writer, names quoted lowercase) plus a mixed-case table,
+  // behind the emulated Oracle dictionary.
+  private val vsrcUrl = "jdbc:derby:memory:graft_vsrc;create=true"
+  private val vsrc = JdbcSource(vsrcUrl, new java.util.Properties())
+  private val fixtureTables = Seq("customer", "documents", "events", "lineitem",
+    "nation", "orders", "part", "region", "supplier")
+  private val mixedCase = "MixedCase_T"
+  private val synced = fixtureTables :+ mixedCase
+
+  private def sql(url: String, stmts: String*): Unit = {
+    val exec = StatementExecutor.jdbc(url, props)
+    try stmts.foreach(exec.execute) finally exec.close()
+  }
+
+  private lazy val vsrcLoaded: Unit = {
+    val load = graft.sinks.JdbcDest(vsrcUrl, new java.util.Properties())
+    fixtureTables.foreach(t => load.write(spark.read.parquet(s"$sfDir/$t.parquet"), t))
+    sql(vsrcUrl,
+      s"""CREATE TABLE "$mixedCase" ("Id" BIGINT, "Label" VARCHAR(20))""",
+      s"""INSERT INTO "$mixedCase" VALUES (1, 'a'), (2, 'b'), (3, NULL)""",
+      "CREATE VIEW user_tables(table_name) AS " +
+        "SELECT CAST(tablename AS VARCHAR(128)) FROM sys.systables WHERE tabletype = 'T'")
+  }
+
+  /** A fresh in-memory destination `db`, synced from the live source. */
+  private def syncFromLive(db: String): Migrator = {
+    vsrcLoaded
+    val m = new Migrator(spark, vsrc,
+      graft.sinks.JdbcDest(s"jdbc:derby:memory:$db;create=true",
+        new java.util.Properties(), batchRowSize = 500, maxConnections = 2),
+      graft.config.SyncConfig(maxParallel = 4))
+    val results = m.run()
+    assert(results.map(_.table).sorted === synced.sorted)
+    assert(results.forall(_.ok), results.filterNot(_.ok).mkString("; "))
+    m
+  }
+  private lazy val countSync = syncFromLive("graft_vdst")
+  private val minute = scala.concurrent.duration.FiniteDuration(1, "min")
+
+  test("pushed row counts equal the Spark scan on both sides, a mixed-case name included; a missing destination table reads NO") {
+    val m = countSync
+    synced.foreach { t =>
+      val n = vsrc.table(spark, t).count()
+      assert(vsrc.rowCount(spark, t, minute) === n, s"source $t")
+      assert(m.destSource.rowCount(spark, t, minute) === n, s"destination $t")
+    }
+    assert(vsrc.rowCount(spark, mixedCase, minute) === 3L)
+    // a source table the destination never received
+    sql(vsrcUrl, """CREATE TABLE "late_t" (ID BIGINT)""", """INSERT INTO "late_t" VALUES (1)""")
+    try {
+      val rows = Comparator.compareCounts(spark, vsrc, m.destSource, synced :+ "late_t")
+        .collect().map(r => r.getString(0) -> r).toMap
+      assert(rows("late_t").getAs[String]("dest_is_exist") === "NO")
+      assert(rows("late_t").getAs[String]("is_ok") === "NO")
+      assert(rows("late_t").getAs[Long]("src_rows") === 1L)
+      synced.foreach(t => assert(rows(t).getAs[String]("is_ok") === "YES", rows(t)))
+    } finally sql(vsrcUrl, """DROP TABLE "late_t"""")
+  }
+
+  test("pushed count keeps the timeout contract: a table locked by another connection times out, no count transaction outlives the lock") {
+    val m = countSync
+    val holder = java.sql.DriverManager.getConnection(vsrcUrl)
+    holder.setAutoCommit(false)
+    def countTxns(): Seq[String] = {
+      val c = java.sql.DriverManager.getConnection(vsrcUrl)
+      try {
+        val rs = c.createStatement().executeQuery(
+          "SELECT SQL_TEXT FROM SYSCS_DIAG.TRANSACTION_TABLE")
+        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+        while (rs.next()) Option(rs.getString(1)).foreach(buf += _)
+        buf.filter(_.startsWith("select count(*)")).toSeq
+      } finally c.close()
+    }
+    try {
+      holder.createStatement().execute("""LOCK TABLE "nation" IN EXCLUSIVE MODE""")
+      val t0 = System.nanoTime()
+      val rows = Comparator.compareCounts(spark, vsrc, m.destSource,
+        Seq("nation", "orders", "region"),
+        timeout = scala.concurrent.duration.FiniteDuration(5, "sec"))
+        .orderBy("table_name").collect() // nation, orders, region
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      // Derby's own lock wait is 60 s: the report must not wait for it
+      assert(elapsed < 30, s"compareCounts took $elapsed s")
+      assert(rows(0).getAs[String]("dest_is_exist") === "TIMEOUT")
+      assert(rows(0).getAs[String]("is_ok") === "NO")
+      assert(rows.drop(1).forall(_.getAs[String]("is_ok") == "YES"), rows.mkString("; "))
+      // Derby checks a query timeout between rows, never in a lock
+      // wait: the count must end at the deadline, not when the lock goes
+      eventually(countTxns().isEmpty, "a count transaction outlived its deadline")
+    } finally {
+      holder.commit()
+      holder.close()
+    }
+    eventually(countTxns().isEmpty, "a count transaction outlived the lock")
+  }
+
+  private def eventually(cond: => Boolean, clue: String): Unit = {
+    val until = System.nanoTime() + 10L * 1000000000L
+    while (!cond && System.nanoTime() < until) Thread.sleep(200)
+    assert(cond, clue)
+  }
+
+  test("compareChecksums over a live JdbcSource → JdbcDest sync: equal after the copy, false after a destination or source edit, throws on a dropped table") {
+    val m = syncFromLive("graft_vdst_ck")
+    val dstUrl = "jdbc:derby:memory:graft_vdst_ck"
+    def same(t: String) = Comparator.compareChecksums(spark, vsrc, m.destSource, t)
+    synced.foreach(t => assert(same(t), s"$t must checksum equal after the copy"))
+    // an in-place destination edit keeps the count, moves the checksum
+    sql(dstUrl, """UPDATE "orders" SET "o_orderpriority" = 'tampered' """ +
+      """WHERE "o_orderkey" = (SELECT MIN("o_orderkey") FROM "orders")""")
+    val orders = Comparator.compareCounts(spark, vsrc, m.destSource, Seq("orders")).head()
+    assert(orders.getAs[String]("is_ok") === "YES")
+    assert(!same("orders"))
+    // a source row that changes after the copy
+    sql(vsrcUrl, s"""UPDATE "$mixedCase" SET "Label" = 'z' WHERE "Id" = 1""")
+    try assert(!same(mixedCase))
+    finally sql(vsrcUrl, s"""UPDATE "$mixedCase" SET "Label" = 'a' WHERE "Id" = 1""")
+    // a destination table that is gone fails the call, never reads true
+    sql(dstUrl, """DROP TABLE "region"""")
+    val t0 = System.nanoTime()
+    intercept[Exception](same("region"))
+    assert((System.nanoTime() - t0) / 1e9 < 60)
+  }
 }

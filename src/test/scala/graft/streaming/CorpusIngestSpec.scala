@@ -509,6 +509,39 @@ class CorpusIngestSpec extends SparkSpec {
       "the epoch-2 survivor must be scorable cosine history")
   }
 
+  test("curated epoch with neither screen: counts already known are not recounted (job budget)") {
+    import spark.implicits._
+    def T(d: Int) = s"u${d}a u${d}b u${d}c u${d}d u${d}e u${d}f"
+    spark.sql("DROP TABLE IF EXISTS jb_mh")
+    Dedup.writeMinhashIndex((0 until 6).map(d => (d.toLong, T(d))).toDF("doc_id", "text"),
+      "doc_id", "text", "jb_mh", buckets = 4)
+    val srcDir = tmp("graft_ci_jb_src")
+    val outDir = tmp("graft_ci_jb_out")
+    (0 until 10).map(i => (100L + i, T(100 + i))).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(srcDir)
+    val stream = spark.readStream.schema(spark.read.parquet(srcDir).schema).parquet(srcDir)
+    // the epoch's own jobs: Spark tags every job of a micro-batch with
+    // its batch id
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("streaming.sql.batchId") != null))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try CorpusIngest.startCuratedIngest(stream, outDir, tmp("graft_ci_jb_ckpt"), "jb_mh")
+      .awaitTermination(180000)
+    finally {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val log = spark.read.parquet(s"${outDir}_curate_log/batch=*")
+      .collect().map(r => (0 to 6).map(r.getLong)).toSeq
+    assert(log === Seq(Seq(10L, 0L, 0L, 0L, 0L, 0L, 10L)), log.mkString(";"))
+    // 29 when the disabled screens recounted their unchanged input
+    assert(jobs.get <= 25, s"one curated epoch ran ${jobs.get} Spark jobs")
+  }
+
   test("startWithIndex → compact → resume: index and batch= layout survive, crash leftover recovered") {
     import spark.implicits._
     def phrase(tag: String) = (1 to 25).map(t => s"${tag}w$t").mkString(" ")
