@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Central SparkSession factory for the graft engine.
   *
-  * Tuned for the local[32] test harness but with settings chosen for a
+  * Tuned for the local harness but with settings chosen for a
   * multi-executor cluster: AQE on (runtime re-plan, skew-join splitting,
   * partition coalescing), shuffle partitions sized to the harness cores
   * (override on a real cluster), UTC session zone so timestamp semantics
@@ -12,12 +12,18 @@ import org.apache.spark.sql.SparkSession
   * round-trip at cmd/root.go:400-421 is a correctness wart we fix).
   */
 object GraftSession {
-  def builder(appName: String = "graft"): SparkSession.Builder = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** Cores of the harness session: `SPARK_GRAFT_CPUS`, else every
+    * processor the JVM sees. The one place the variable is read.
+    */
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession
       .builder()
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -30,12 +36,25 @@ object GraftSession {
       // partition count above tracks cores and should be raised with
       // the cluster (AQE coalescing trims the excess), never lowered
       .config("spark.ui.enabled", "false")
-  }
 
-  /** Local session for tests / CLI runs outside spark-submit. */
+  /** The harness session every main runs on (Bench, Verify, Probe, the
+    * `graft.tools` mains, the CLI): `local[cpus]`, a throwaway
+    * warehouse (gates that materialize bucketed index tables write
+    * through the catalog, and must not leave `spark-warehouse/` in the
+    * working directory), log level ERROR and the sidecar-path warning
+    * silenced. ERROR, not WARN: the k-bounded epilogue windows emit
+    * WindowExec's single-partition warning, which competes with the
+    * bench's JSON line for the 2000-char stdout tail its reader keeps. Failures
+    * still surface: each main reports its own.
+    */
   def local(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    builder(appName).master(s"local[$cpus]").getOrCreate()
+    val spark = builder(appName).master(s"local[$cpus]")
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    silenceSidecarPathNoise()
+    spark
   }
 
   /** Harness-only log hygiene: reading a `_version_info` annotation
@@ -43,8 +62,9 @@ object GraftSession {
     * paths were ignored" (the `_` prefix trips its data-path filter)
     * even though the read succeeds — benign, but sbt tags the stderr
     * line `[error]` and it reads like a failure in CI logs. Raise
-    * that ONE logger past WARN. Called by the Bench/Verify/CLI mains
-    * only — the library itself never touches global log config.
+    * that ONE logger past WARN. Called by the harness session and
+    * perfbench only — the library itself never touches global log
+    * config.
     */
   def silenceSidecarPathNoise(): Unit =
     org.apache.logging.log4j.core.config.Configurator.setLevel(

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev probe: run one `SparkEntry.queries` entry by name against a
   * fixture dir and print a sample plus the row count — the fast local
@@ -12,14 +11,7 @@ object Probe {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val n = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("graft-probe")
     val df = SparkEntry.queries(name)(spark, dir)
     df.show(n, truncate = false)
     println(s"[probe] $name rows=${df.count()}")

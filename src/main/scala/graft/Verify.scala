@@ -1,29 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // old-vintage fixtures carried TIMESTAMP(NANOS), which Spark 4
-      // rejects natively; the flag keeps them readable (as long ns —
-      // Fixtures.normalizeTs converts) and is inert on the current
-      // TIMESTAMP(MICROS) vintage
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // gates that materialize bucketed index tables (q_sim_knn_label_ivf)
-      // write through the catalog; keep the warehouse out of the repo
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_verify_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.silenceSidecarPathNoise()
+    val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // dev knob (driver leaves it unset): restrict the dump to queries
     // matching a regex — single-gate iteration without the full 8-min run
@@ -37,21 +19,14 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
     spark.stop()
   }
+
+  /** The oracle SQL map as JSON. A bad escape (a tab, CR or control
+    * character in the oracle SQL) makes the correctness gate's
+    * json.load fail and zeroes the round's correctness, so the escaping
+    * is the serializer's, not hand-written.
+    */
+  private[graft] def oracleJson(sql: Map[String, String]): String = Harness.toJson(sql)
 }

@@ -48,7 +48,6 @@ object Main {
       org.apache.spark.SPARK_VERSION + ")"); return }
 
     val spark = GraftSession.local("graft-cli")
-    spark.sparkContext.setLogLevel("WARN")
     try {
       cmd match {
         case "sync"        => sync(spark, opts, ddl = true, data = true)

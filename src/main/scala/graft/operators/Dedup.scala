@@ -526,26 +526,6 @@ object Dedup {
       .drop("__in", "__keep")
   }
 
-  /** Cluster-collapsing dedup: keep exactly one doc (lowest id) per
-    * connected near-duplicate cluster — the strict variant of
-    * [[minhashDedup]].
-    */
-  def minhashDedupTransitive(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleSize: Int = 3,
-      k: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.7
-  ): DataFrame = {
-    val pairs = minhashNearDupPairs(df, idCol, textCol, shingleSize, k, bands, threshold)
-    val clusters = duplicateClusters(pairs)
-    val drop = clusters.filter(col("id") =!= col("cluster"))
-      .select(col("id").as(idCol))
-    df.join(drop, Seq(idCol), "left_anti")
-  }
-
   // -------------------------------------------------------------- simhash
 
   /** 64-bit SimHash of the token multiset: per bit, sum +1/-1 weighted by

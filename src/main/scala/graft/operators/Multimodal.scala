@@ -23,26 +23,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Typed metadata carried alongside every media payload. */
-  val mediaMetaType: StructType = StructType(Seq(
-    StructField("format", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_bytes", LongType)
-  ))
-
-  /** Wrap a raw binary column into the (payload, meta) shape. Byte-length
-    * metadata is computed inline (codegen); format/dims are filled by the
-    * decoder stage since they require parsing the container.
-    */
-  def asMedia(df: DataFrame, binCol: String): DataFrame =
-    df.withColumn("media_meta", struct(
-      lit(null).cast(StringType).as("format"),
-      lit(null).cast(IntegerType).as("width"),
-      lit(null).cast(IntegerType).as("height"),
-      length(col(binCol)).cast(LongType).as("n_bytes")
-    ))
-
   /** Feature schema produced by the decode stage. */
   def decodedSchema(idField: StructField): StructType = StructType(Seq(
     idField,
@@ -360,66 +340,6 @@ object Multimodal {
           ((bytes(o) & 0xff) | (bytes(o + 1) << 8)).toShort.toInt
         }
 
-      /** Copy one interleaved frame's RAW bytes (all channels) — the
-        * lossless unit [[resamplePcmWav]] shuttles, no decode/requantize
-        * round-trip.
-        */
-      def copyFrame(frame: Int, dst: Array[Byte], dstOff: Int): Unit = {
-        val fb = (bitsPerSample / 8) * channels
-        System.arraycopy(bytes, dataOff + frame * fb, dst, dstOff, fb)
-      }
-    }
-
-    /** Sample-rate conversion of a PCM WAV payload by nearest-frame
-      * (zero-order-hold) selection: output frame `i` copies source
-      * frame `⌊i·srcRate/dstRate⌋` — exact integer arithmetic, raw
-      * frame bytes shuttled without requantization, re-encoded as a
-      * canonical 44-byte-header PCM WAV at `dstRate`. Deterministic
-      * and engine-reproducible like [[resampleNearestP6]]; an
-      * interpolating/windowed-sinc resampler would slot into the same
-      * frame loop. None for anything [[parseWav]] rejects or a
-      * conversion that yields zero frames.
-      */
-    private[operators] def resamplePcmWav(
-        bytes: Array[Byte], dstRate: Int): Option[(Array[Byte], Int, Int)] = {
-      // upper bound keeps every header field (incl. dwAvgBytesPerSec =
-      // dstRate·frameBytes, frameBytes <= 16) inside Int — an
-      // unguarded absurd rate would silently write a garbage byte-rate
-      require(dstRate > 0 && dstRate <= 10000000,
-        s"target sample rate out of range: $dstRate")
-      parseWav(bytes).flatMap { c =>
-        val fb = (c.bitsPerSample / 8) * c.channels
-        val nOutL = c.nFrames.toLong * dstRate / c.sampleRate
-        if (nOutL <= 0 || nOutL * fb > Int.MaxValue - 64) None
-        else {
-          val nOut = nOutL.toInt
-          val dataLen = nOut * fb
-          val out = new Array[Byte](44 + dataLen)
-          def ascii(o: Int, s: String): Unit = {
-            val b = s.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-            System.arraycopy(b, 0, out, o, 4)
-          }
-          def le32(o: Int, v: Int): Unit = {
-            out(o) = (v & 0xff).toByte; out(o + 1) = ((v >> 8) & 0xff).toByte
-            out(o + 2) = ((v >> 16) & 0xff).toByte; out(o + 3) = ((v >> 24) & 0xff).toByte
-          }
-          def le16(o: Int, v: Int): Unit = {
-            out(o) = (v & 0xff).toByte; out(o + 1) = ((v >> 8) & 0xff).toByte
-          }
-          ascii(0, "RIFF"); le32(4, 36 + dataLen); ascii(8, "WAVE")
-          ascii(12, "fmt "); le32(16, 16)
-          le16(20, 1); le16(22, c.channels)
-          le32(24, dstRate); le32(28, dstRate * fb)
-          le16(32, fb); le16(34, c.bitsPerSample)
-          ascii(36, "data"); le32(40, dataLen)
-          var i = 0
-          while (i < nOut) {
-            c.copyFrame((i.toLong * c.sampleRate / dstRate).toInt, out, 44 + i * fb)
-            i += 1
-          }
-          Some((out, nOut, c.channels))
-        }
-      }
     }
 
     /** Real WAV parse: `"RIFF" <size> "WAVE"` then a word-aligned chunk
@@ -709,8 +629,8 @@ object Multimodal {
       * exact integer arithmetic:
       *
       *  1. canonicalize rate: `x(i) = Σ_ch rawSample(⌊i·srcRate/C⌋, ch)`
-      *     for `i < N = ⌊nFrames·C/srcRate⌋` — the nearest-frame grid
-      *     [[resamplePcmWav]] already walks, channel-SUMMED (not
+      *     for `i < N = ⌊nFrames·C/srcRate⌋` — a nearest-frame
+      *     (zero-order-hold) grid, channel-SUMMED (not
       *     averaged: the sum stays integer and scale-invariance does
       *     not care about the constant factor);
       *  2. integer filterbank: 8 time slices × 9 lag bands —
@@ -879,40 +799,6 @@ object Multimodal {
         i => col(binCol).substr((i * width + 1).cast("int"), lit(32))
       )).as(Seq("frame_idx", "frame_sample"))
     )
-  }
-
-  /** Audio resample stage: WAV payloads are sample-rate-converted to
-    * `sampleRate` ([[Decoders.resamplePcmWav]]: nearest-frame
-    * selection, raw bytes shuttled, canonical PCM re-encode) with
-    * `format`/`width`/`height` reporting the produced clip (frames ×
-    * channels, the audio reading of the decode contract); payloads the
-    * WAV parser rejects pass through byte-identical with NULL
-    * format/dims — the same honest-failure contract as [[resize]].
-    * Same `mapPartitions` batch shape as the other codecs.
-    */
-  def resampleAudio(df: DataFrame, idCol: String, binCol: String,
-      sampleRate: Int): DataFrame = {
-    require(sampleRate > 0, "target sample rate must be positive")
-    val idField = df.schema(idCol)
-    val outSchema = StructType(Seq(
-      idField,
-      StructField("payload", BinaryType),
-      StructField("format", StringType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType)
-    ))
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.select(col(idCol), col(binCol)).mapPartitions { it =>
-      it.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        Decoders.resamplePcmWav(bytes, sampleRate) match {
-          case Some((wav, frames, channels)) =>
-            Row(r.get(0), wav, "wav", frames, channels)
-          case None =>
-            Row(r.get(0), bytes, null, null, null)
-        }
-      }
-    }(enc)
   }
 
   /** Perceptual image fingerprints: one 64-bit dHash per decodable

@@ -326,23 +326,12 @@ object TextAnalysis {
     when(isSpaceFreeScript(text), charBigramText(text))
       .otherwise(regexp_replace(text, "　", " "))
 
-  /** Whitespace tokens of the script-adaptively re-tokenized text —
-    * token-count/quality heuristics for mixed-script corpora.
-    */
-  def adaptiveTokens(text: Column): Column = tokens(adaptiveRetokenize(text))
-
   /** 64-bit content fingerprint: hash of the whitespace-normalized,
     * lowercased text. Identical fingerprints ⇒ exact duplicates modulo
     * whitespace/case — the first-stage key for exact dedup.
     */
   def fingerprint(text: Column): Column =
     xxhash64(array_join(tokens(lower(text)), " "))
-
-  /** Order-insensitive bag fingerprint: hash of the sorted token
-    * multiset; robust to token reordering (catches shuffled copies).
-    */
-  def bagFingerprint(text: Column): Column =
-    xxhash64(array_join(array_sort(tokens(lower(text))), " "))
 
   // ------------------------------------------------ rolling-hash kernels
 

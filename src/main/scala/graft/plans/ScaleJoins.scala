@@ -71,18 +71,6 @@ object ScaleJoins {
       .sortBy(bucketCol)
       .saveAsTable(tableName)
 
-  /** Equi-join of two same-bucketed catalog tables — verify with
-    * `.explain`: no Exchange on either side.
-    */
-  def bucketedJoin(
-      spark: SparkSession,
-      left: String,
-      right: String,
-      key: String,
-      joinType: String = "inner"
-  ): DataFrame =
-    spark.table(left).join(spark.table(right), Seq(key), joinType)
-
   /** Skew-resistant equi-join: the (large, skewed) side gets a random-ish
     * but *deterministic* salt derived from row content; the small side is
     * replicated `saltBuckets` times. Join key becomes (key, salt), so the

@@ -90,88 +90,6 @@ object TextFormats {
     withMinShards(df, minShards)
   }
 
-  /** [[writeJsonl]] with the shard count sized from the data itself:
-    * one narrow pass sums the serialized line lengths, the write
-    * repartitions to ceil(bytes / targetShardBytes). This
-    * operationalizes the scale note above — downstream parallelism on
-    * compressed JSONL equals shard count, so a 100 TB corpus written
-    * through a 200-partition upstream plan would otherwise land as 200
-    * half-terabyte single-task stragglers, while a tiny dimension
-    * table would fan into thousands of empty files. The sizing pass
-    * reads only computed line lengths (no payload collect) and costs
-    * one extra scan of the input — worth it exactly when the output's
-    * shard geometry matters more than one pass (i.e. corpus handoff).
-    *
-    * `targetShardBytes` counts UNCOMPRESSED serialized bytes; with the
-    * default gzip codec the on-disk shards land at roughly a third of
-    * it (fixture text compresses ~3:1 — tune per corpus).
-    */
-  def writeJsonlSharded(df: DataFrame, dir: String, table: String,
-      targetShardBytes: Long = 256L << 20,
-      codec: String = "gzip"): String = {
-    require(targetShardBytes > 0, "targetShardBytes must be positive")
-    import org.apache.spark.sql.functions._
-    val totalBytes = df
-      .select(octet_length(to_json(struct(df.columns.map(col)
-        .toIndexedSeq: _*))).cast("long").as("b"))
-      .agg(sum(col("b"))).collect()(0) match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      }
-    val shards = math.max(1L,
-      (totalBytes + targetShardBytes - 1) / targetShardBytes).toInt
-    writeJsonl(df.repartition(shards), dir, table, codec)
-  }
-
-  /** Quarantining twin of [[readJsonl]] for the long-haul ingest: a
-    * multi-day 100 TB run shouldn't die on one malformed line (that's
-    * what FAILFAST does), nor silently dissolve it into a null row
-    * (PERMISSIVE's default). One `text` scan parses every line with
-    * `from_json`; lines that don't parse land in the returned
-    * quarantine frame as (raw line, source shard) for triage, and the
-    * counts add up: good + bad = non-blank lines.
-    *
-    * Built on text + `from_json` rather than the json reader's
-    * `_corrupt_record` column deliberately: the corrupt-column path
-    * forbids queries that reference only the corrupt column (Spark
-    * requires caching the whole frame first — a non-starter at scale),
-    * while this shape is two filters over one scan, no cache, and both
-    * outputs stay lazily re-computable.
-    *
-    * Semantics note: quarantine means UNPARSEABLE. A line that is valid
-    * JSON but missing fields (or null-typed) parses to nulls — that's
-    * representable data under the schema contract, not corruption; gate
-    * it downstream with quality filters.
-    */
-  def readJsonlQuarantine(spark: SparkSession, path: String,
-      schema: StructType): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions._
-    // PERMISSIVE from_json yields a row of NULLS (not a null struct)
-    // for malformed input, indistinguishable from an all-null record —
-    // a corrupt-record field inside the parse schema is the reliable
-    // malformed-vs-representable signal
-    val corrupt = "_graft_corrupt"
-    require(!schema.fieldNames.contains(corrupt),
-      s"schema may not contain the reserved column $corrupt")
-    val withCorrupt = StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField(corrupt,
-        org.apache.spark.sql.types.StringType))
-    val parsed = spark.read.text(path).select(
-      input_file_name().as("shard"),
-      col("value"),
-      from_json(col("value"), withCorrupt,
-        Map("mode" -> "PERMISSIVE",
-          "columnNameOfCorruptRecord" -> corrupt)).as("rec"))
-    val good = parsed
-      .filter(col("rec").isNotNull && col(s"rec.$corrupt").isNull)
-      .select(schema.fieldNames.toIndexedSeq.map(f => col(s"rec.$f").as(f)): _*)
-    val bad = parsed
-      .filter((col("rec").isNull || col(s"rec.$corrupt").isNotNull) &&
-        length(trim(col("value"))) > 0)
-      .select(col("value").as("raw_line"), col("shard"))
-    (good, bad)
-  }
-
   /** Write one CSV table: `dir/table.csv/part-*.csv[.gz]`. RFC-4180
     * quoting (quote doubled by escape=quote), explicit null sentinel,
     * header row per shard.

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.ListenerBusDrain
 
 /** Optimization-round tooling: run ONE `SparkEntry.queries` entry and
   * print every Spark job it launches — job id, call site of the first
@@ -27,19 +27,7 @@ object JobTrace {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val execute = args.length > 2 && args(2).toBoolean
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_jobtrace_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.silenceSidecarPathNoise()
+    val spark = graft.GraftSession.local("graft-jobtrace")
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val meta = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int, Int)]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -63,7 +51,7 @@ object JobTrace {
     var buildSec = 0.0
     var repSec = 0.0
     (1 to reps).foreach { r =>
-      if (r == reps) { Thread.sleep(500); lines.clear() }
+      if (r == reps) { ListenerBusDrain(spark.sparkContext); lines.clear() }
       val tr0 = System.nanoTime()
       val t0 = System.nanoTime()
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
@@ -72,7 +60,7 @@ object JobTrace {
       repSec = (System.nanoTime() - tr0) / 1e9
       println(f"[jobtrace] rep $r: $repSec%.2f s (build $buildSec%.2f s)")
     }
-    Thread.sleep(500) // listener bus is async
+    ListenerBusDrain(spark.sparkContext)
     import scala.jdk.CollectionConverters._
     println(s"== JobTrace $name (sf=$sfDir, execute=$execute, last of $reps reps) ==")
     lines.asScala.foreach(println)

@@ -1,8 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import scala.collection.immutable.ListMap
+
+import graft.Harness
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 
 /** Index-lifecycle + streaming-ingest soak: the build/append/compact/
@@ -43,24 +45,11 @@ object LifecycleSoak {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_lc_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.silenceSidecarPathNoise()
+    val spark = graft.GraftSession.local("graft-lifecycle-soak")
 
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    def fmt(v: Double): String = f"$v%.3f"
     // dev knob: GRAFT_LC_STEPS=jdb (comma-set of mh,ivf,bm,ing,jdb) probes
     // one lifecycle family; unset = all. Skipped steps report -1.
     val steps = sys.env.get("GRAFT_LC_STEPS").map(_.split(",").toSet)
@@ -244,15 +233,12 @@ object LifecycleSoak {
       } finally org.apache.commons.io.FileUtils.deleteQuietly(dbDir.toFile)
     }
 
-    println(
-      s"""{"mhb":${fmt(mhb)},"mha":${fmt(mha)},"mhs":${fmt(mhs)},""" +
-        s""""mhc":${fmt(mhc)},"ivb":${fmt(ivb)},"iva":${fmt(iva)},""" +
-        s""""ivs":${fmt(ivs)},"bmb":${fmt(bmb)},"bma":${fmt(bma)},""" +
-        s""""bmq":${fmt(bmq)},"bms":${fmt(bms)},""" +
-        s""""ebb":${fmt(ebb)},"eba":${fmt(eba)},"ebp":${fmt(ebp)},""" +
-        s""""ebd":${fmt(ebd)},"mnt":${fmt(mnt)},""" +
-        s""""ing":${fmt(ing)},"jdb":${fmt(jdb)},""" +
-        s""""ckpt_mb":${fmt(ckptMb)}}""")
+    // tools/soak.py finds the line by its first key (`{"mhb"`)
+    val line = Seq("mhb" -> mhb, "mha" -> mha, "mhs" -> mhs, "mhc" -> mhc,
+      "ivb" -> ivb, "iva" -> iva, "ivs" -> ivs, "bmb" -> bmb, "bma" -> bma,
+      "bmq" -> bmq, "bms" -> bms, "ebb" -> ebb, "eba" -> eba, "ebp" -> ebp,
+      "ebd" -> ebd, "mnt" -> mnt, "ing" -> ing, "jdb" -> jdb, "ckpt_mb" -> ckptMb)
+    println(Harness.toJson(ListMap(line.map { case (k, v) => k -> Harness.Raw(f"$v%.3f") }: _*)))
     spark.stop()
   }
 }

@@ -1,18 +1,18 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round tooling: dump `.explain("formatted")` for the
   * named `SparkEntry.queries` entries to `<outDir>/<query>_<tag>.txt`,
-  * under the SAME session shape the bench runs (local[$SPARK_GRAFT_CPUS],
-  * shuffle partitions = cpus, AQE on) so the captured plan is the plan
-  * the bench actually executes. Optionally times each query with the
+  * under the SAME harness session the bench runs on
+  * ([[graft.GraftSession.local]]) so the captured plan is the plan the
+  * bench actually executes. Optionally times each query with the
   * noop sink (guide §1.4 — computes every column, discards the write)
   * so a plan file and an isolated computation time come from one run.
   *
-  * Also counts SPARK JOBS per phase (entry build vs each noop rep):
+  * Also counts SPARK JOBS per phase (entry build vs the noop reps):
   * the write-path gates (z-order, versioned deletion) do their real
   * work EAGERLY inside the entry function, where the final frame's
   * plan can't show it — the job count is the before/after evidence for
@@ -32,19 +32,7 @@ object PlanDump {
     val re = args(1).r
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val reps = if (args.length > 3) args(3).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_plandump_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.silenceSidecarPathNoise()
+    val spark = graft.GraftSession.local("graft-plandump")
     val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -52,8 +40,8 @@ object PlanDump {
         jobCount.incrementAndGet(); ()
       }
     })
-    // listener delivery is async — settle before sampling the counter
-    def jobsNow(): Int = { Thread.sleep(300); jobCount.get() }
+    // listener delivery is async — drain the bus before sampling the counter
+    def jobsNow(): Int = { ListenerBusDrain(spark.sparkContext); jobCount.get() }
     val outDir = Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLANDIR", "plans/r20"))
     Files.createDirectories(outDir)
@@ -68,26 +56,19 @@ object PlanDump {
           val buildSec = (System.nanoTime() - tb0) / 1e9
           val buildJobs = jobsNow() - j0
           val plan = df.queryExecution.explainString(FormattedMode)
-          val runs = (1 to reps).map { _ =>
-            val jr = jobsNow()
-            val t0 = System.nanoTime()
+          val jr = jobsNow()
+          val runs = graft.Harness.timedReps(reps) {
             df.write.format("noop").mode("overwrite").save()
-            ((System.nanoTime() - t0) / 1e9, jobsNow() - jr)
           }
+          val repJobs = jobsNow() - jr
           val timing =
-            if (runs.isEmpty)
-              f"== Entry build (eager work inside the query fn) ==%n" +
-                f"build: $buildSec%.3f s, $buildJobs spark jobs%n%n"
-            else {
-              val s = runs.map(_._1).sorted
-              val med = s(s.size / 2)
-              f"== Entry build (eager work inside the query fn) ==%n" +
-                f"build: $buildSec%.3f s, $buildJobs spark jobs%n" +
+            f"== Entry build (eager work inside the query fn) ==%n" +
+              f"build: $buildSec%.3f s, $buildJobs spark jobs%n" +
+              (if (reps == 0) f"%n" else
                 f"== Noop-sink timing (reps=$reps, sf=$sfDir) ==%n" +
-                runs.map { case (t, j) => f"$t%.3f s/$j jobs" }
-                  .mkString("runs: ", ", ", "") +
-                f"%nmedian: $med%.3f s%n%n"
-            }
+                  runs.map(t => f"$t%.3f s").mkString("runs: ", ", ", f" ($repJobs spark jobs)%n") +
+                  (if (runs.isEmpty) f"median: failed%n%n"
+                   else f"median: ${graft.Harness.median(runs)}%.3f s%n%n"))
           Files.writeString(outDir.resolve(s"${name}_$tag.txt"), timing + plan)
           println(f"[plandump] $name -> $outDir/${name}_$tag.txt " +
             f"(build $buildSec%.2fs/$buildJobs jobs)")

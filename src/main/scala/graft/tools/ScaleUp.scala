@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic fixture scale-up: builds an `sf × factor` dataset from
@@ -58,12 +58,7 @@ object ScaleUp {
     val dest = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
 
-    val spark = SparkSession.builder()
-      .appName("graft-scaleup")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-scaleup")
 
     def read(name: String) = spark.read.parquet(s"$src/$name.parquet")
     def write(name: String, df: DataFrame): Unit = {

@@ -231,8 +231,11 @@ class DedupSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(onePass === Set(1L, 2L))
 
-    // transitive: the whole cluster collapses to the lowest id
-    val strict = Dedup.minhashDedupTransitive(df, "doc_id", "text", 3, 64, 32, 0.3)
+    // transitive: the connected components collapse the whole cluster
+    // to its lowest id
+    val drop = Dedup.duplicateClusters(pairs).filter(col("id") =!= col("cluster"))
+      .select(col("id").as("doc_id"))
+    val strict = df.join(drop, Seq("doc_id"), "left_anti")
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(strict === Set(1L))
   }

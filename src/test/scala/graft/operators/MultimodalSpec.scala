@@ -9,14 +9,6 @@ class MultimodalSpec extends SparkSpec {
   private lazy val media = table("documents")
     .select(col("doc_id"), col("text").cast("binary").as("payload"))
 
-  test("asMedia attaches typed metadata with byte length") {
-    val out = Multimodal.asMedia(media, "payload")
-    val r = out.filter(col("doc_id") === 0)
-      .select(col("media_meta.n_bytes"), col("media_meta.format")).collect()(0)
-    assert(r.getLong(0) > 0)
-    assert(r.isNullAt(1)) // format unknown until decode
-  }
-
   test("decodeFeatures: partition-parallel decode with stable schema and determinism") {
     val out = Multimodal.decodeFeatures(media, "doc_id", "payload")
     assert(out.columns.toSeq ===
@@ -325,46 +317,6 @@ class MultimodalSpec extends SparkSpec {
       if (bits == 8) bb += (s & 0xff).toByte else le16(s & 0xffff)
     }
     bb.toArray
-  }
-
-  test("resamplePcmWav: exact nearest-frame selection, lossless byte shuttle, honest failures") {
-    val src = wav(1, 8000, 8, Seq(10, 20, 30, 40, 50, 60, 70, 80))
-    // 2:1 downsample keeps every other frame, bytes verbatim
-    val down = Multimodal.Decoders.resamplePcmWav(src, 4000).get._1
-    val dc = Multimodal.Decoders.parseWav(down).get
-    assert((dc.sampleRate, dc.nFrames, dc.channels, dc.bitsPerSample)
-      === ((4000, 4, 1, 8)))
-    assert(down.drop(44).toSeq === Seq(10, 30, 50, 70).map(_.toByte))
-    // 1:2 upsample duplicates each frame (zero-order hold)
-    val up = Multimodal.Decoders.resamplePcmWav(
-      wav(1, 8000, 8, Seq(10, 20)), 16000).get._1
-    assert(up.drop(44).toSeq === Seq(10, 10, 20, 20).map(_.toByte))
-    // stereo 16-bit: frames stay interleaved pairs, untouched bytes
-    val st = wav(2, 44100, 16, Seq(100, -100, 200, -200, 300, -300, 400, -400))
-    val st2 = Multimodal.Decoders.resamplePcmWav(st, 22050).get._1
-    val sc = Multimodal.Decoders.parseWav(st2).get
-    assert((sc.sampleRate, sc.nFrames, sc.channels) === ((22050, 2, 2)))
-    assert(sc.sample(0, 0) === 100 / 32768.0)
-    assert(sc.sample(1, 1) === -300 / 32768.0)
-    // zero-output conversions and non-WAV payloads reject, never throw
-    assert(Multimodal.Decoders.resamplePcmWav(
-      wav(1, 8000, 8, Seq(10, 20)), 3999).isEmpty)
-    assert(Multimodal.Decoders.resamplePcmWav("not audio".getBytes, 8000).isEmpty)
-  }
-
-  test("resampleAudio: wav payloads convert, non-audio passes through with null dims") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, wav(1, 8000, 8, Seq(10, 20, 30, 40))),
-      (2L, "plain text".getBytes)).toDF("id", "payload")
-    val out = Multimodal.resampleAudio(df, "id", "payload", sampleRate = 4000)
-      .orderBy("id").collect()
-    assert(out(0).getString(2) === "wav")
-    assert((out(0).getInt(3), out(0).getInt(4)) === ((2, 1)))
-    val rc = Multimodal.Decoders.parseWav(out(0).getAs[Array[Byte]](1)).get
-    assert(rc.sampleRate === 4000 && rc.nFrames === 2)
-    assert(out(1).isNullAt(2) && out(1).isNullAt(3))
-    assert(out(1).getAs[Array[Byte]](1).toSeq === "plain text".getBytes.toSeq)
   }
 
   test("wav decode: 8-bit mono parses geometry and one-pass stats") {

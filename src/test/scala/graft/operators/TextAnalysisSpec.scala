@@ -40,13 +40,10 @@ class TextAnalysisSpec extends SparkSpec {
     assert(one(langId(col("t")), "") === "und")
   }
 
-  test("fingerprint is whitespace/case-insensitive; bagFingerprint order-insensitive") {
+  test("fingerprint is whitespace/case-insensitive and order-sensitive") {
     val a = one(fingerprint(col("t")), "Hello  World")
     val b = one(fingerprint(col("t")), "hello world")
     assert(a === b)
-    val c = one(bagFingerprint(col("t")), "world hello")
-    val d = one(bagFingerprint(col("t")), "hello world")
-    assert(c === d)
     assert(one(fingerprint(col("t")), "world hello") !== b)
   }
 
@@ -684,7 +681,7 @@ class TextAnalysisSpec extends SparkSpec {
     // the adaptive tokens feed the SAME counters: a CJK doc stops
     // counting as one giant token
     val n = Seq("東京都は大都市です").toDF("t")
-      .select(size(TextAnalysis.adaptiveTokens(col("t")))).head().getInt(0)
+      .select(size(TextAnalysis.tokens(TextAnalysis.adaptiveRetokenize(col("t"))))).head().getInt(0)
     assert(n === 8, s"expected 8 bigrams, got $n")
     // the ideographic space U+3000 — the standard CJK separator —
     // strips like ASCII whitespace: no noise grams spanning it, and it

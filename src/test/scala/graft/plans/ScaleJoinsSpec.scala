@@ -19,7 +19,7 @@ class ScaleJoinsSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = ScaleJoins.bucketedJoin(spark, "li_bkt", "o_bkt", "l_orderkey")
+      val joined = spark.table("li_bkt").join(spark.table("o_bkt"), Seq("l_orderkey"))
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), plan)
       assert(plan.contains("Bucketed: true"), plan)

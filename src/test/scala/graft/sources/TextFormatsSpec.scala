@@ -93,39 +93,6 @@ class TextFormatsSpec extends SparkSpec {
     assert(ex.getMessage != null)
   }
 
-  test("sharded write: shard count follows measured bytes, not upstream partitions") {
-    val docs = table("documents") // sf0.001: ~600 docs, ~100 chars each
-    val measured = docs.selectExpr(
-      "sum(octet_length(to_json(struct(*)))) AS b").collect()(0).getLong(0)
-    val target = measured / 4 + 1 // force ~4 shards regardless of input layout
-    val dir = java.nio.file.Files.createTempDirectory("tf_shard").toString
-    val path = TextFormats.writeJsonlSharded(docs.coalesce(1), dir, "docs", target)
-    val parts = new java.io.File(path).listFiles()
-      .count(f => f.getName.startsWith("part-") && f.length() > 0)
-    assert(parts === 4, s"expected 4 shards from a 1-partition input, got $parts")
-    // and the content still round-trips
-    val back = TextFormats.readJsonl(spark, path, docs.schema)
-    assert(back.count() === docs.count())
-  }
-
-  test("quarantine read: one scan splits parseable rows from raw bad lines") {
-    val dir = java.nio.file.Files.createTempDirectory("tf_quar")
-    java.nio.file.Files.write(dir.resolve("part-00000.json"),
-      ("{\"id\":1,\"text\":\"ok\",\"tag\":\"t\"}\n" +
-        "garbage not json\n" +
-        "\n" + // blank lines are neither good nor quarantined
-        "{\"id\":2,\"text\":\"missing tag is DATA, not corruption\"}\n" +
-        "{\"id\":3,\"text\":\"ok too\",\"tag\":null}\n").getBytes("UTF-8"))
-    val (good, bad) = TextFormats.readJsonlQuarantine(spark, dir.toString, schema)
-    val g = good.orderBy("id").collect()
-    assert(g.map(_.getLong(0)).toSeq === Seq(1L, 2L, 3L))
-    assert(g(1).isNullAt(2), "absent field parses to null under the contract")
-    val b = bad.collect()
-    assert(b.length === 1)
-    assert(b(0).getString(0) === "garbage not json")
-    assert(b(0).getString(1).endsWith("part-00000.json"), "quarantine keeps the shard")
-  }
-
   test("round-trip gates run against the fixture documents table") {
     // the q_k2/q_k3 shapes end-to-end at sf0.001: decorated text incl.
     // the hazard suffix must hash-match the pre-write frame
