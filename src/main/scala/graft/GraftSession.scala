@@ -49,12 +49,20 @@ object GraftSession {
     */
   def local(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).master(s"local[$cpus]")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", throwawayDir("graft_wh"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     silenceSidecarPathNoise()
     spark
+  }
+
+  /** A fresh directory under the temp dir, deleted with its contents
+    * when the JVM exits: the harness and spec warehouses.
+    */
+  private[graft] def throwawayDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.getPath
   }
 
   /** Harness-only log hygiene: reading a `_version_info` annotation

@@ -474,6 +474,103 @@ object TextAnalysis {
         col("score_fx"))
   }
 
+  /** The milli-unit idf quantization both cosine forms share — one
+    * definition so the exact-rational contract cannot drift between
+    * the all-pairs and the index-backed paths (or their twins).
+    */
+  private def cosineIdfFx(dfCol: Column, nCol: Column): Column =
+    floor(log((nCol + 1).cast("double") / (dfCol + 1).cast("double"))
+      * lit(1000.0) + lit(0.5)).cast("long")
+
+  /** Exact Σ(a·b) over fixed-point longs for the PER-CALL cosine
+    * sums (the index path's numerator and batch norms, and through
+    * [[fxMul]] the all-pairs norms and numerators). Under ANSI — this
+    * build's session default — the accumulation stays in primitive
+    * LONG: identical values inside the documented exact-compare domain
+    * (the outputs are long via [[cosineLongExact]] anyway, so a sum
+    * past ~9.2e18 was ALREADY a refusal), and overflow still fails
+    * loudly (Spark raises ARITHMETIC_OVERFLOW on the sum or the
+    * product). The DECIMAL(38,0) accumulation survives only for
+    * ANSI-off sessions, where a long sum would wrap silently — there
+    * the decimal-null loudness contract ([[cosineThresholdFilter]],
+    * [[cosineLongExact]]) still catches it. Why: Decimal(38,0) partial
+    * sums allocate and box on every row, and the numerator aggregate
+    * processes |batch terms ∩ doc terms| rows per (batch, history)
+    * pair — the suite's single hottest aggregate ran entirely in
+    * decimal for values that fit a long. (The STORED norms sidecar is
+    * untouched: its on-disk decimal schema is a persisted format.)
+    */
+  // BUILD-TIME BINDING, by design: the branch reads the calling
+  // thread's session conf when the plan is CONSTRUCTED (every cosine
+  // entry point builds its plan per call, so build==execute session in
+  // this codebase). A caller that builds a frame, flips
+  // spark.sql.ansi.enabled OFF, and only then executes it keeps the
+  // primitive long sum — and with it ANSI's loud-overflow guarantee
+  // GONE (a wrap would be silent). Don't hold cosine frames across an
+  // ANSI toggle; rebuild them.
+  private def fxMulSum(a: Column, b: Column): Column = sum(fxMul(a, b))
+
+  private def fxMul(a: Column, b: Column): Column =
+    if (org.apache.spark.sql.internal.SQLConf.get.ansiEnabled) a * b
+    else a.cast(org.apache.spark.sql.types.DecimalType(38, 0)) * b
+
+  /** [[fxMulSum]]'s per-row form: Σ f(x) over an array, accumulated
+    * the same way (LONG under ANSI, DECIMAL(38,0) without), so `f`
+    * returns [[fxMul]]'s type.
+    */
+  private def fxArraySum(xs: Column, f: Column => Column): Column = {
+    val zero =
+      if (org.apache.spark.sql.internal.SQLConf.get.ansiEnabled) lit(0L)
+      else lit(0).cast(org.apache.spark.sql.types.DecimalType(38, 0))
+    aggregate(xs, zero, (acc, x) => acc + f(x))
+  }
+
+  /** The shared loud-overflow threshold filter: under ANSI (this
+    * build's default) decimal overflow throws before any null exists;
+    * with ANSI off a null product means overflow and must raise, not
+    * silently drop the pair.
+    */
+  private def cosineThresholdFilter(
+      lhs: Column, rhs: Column, opName: String): Column =
+    when(lhs.isNull || rhs.isNull,
+      raise_error(lit(s"$opName: fixed-point overflow — a document's " +
+        "weight mass exceeds the exact-compare domain " +
+        "(Σ(tf·idf_fx)² ≲ 1e19); chunk or cap documents first"))
+        .cast("boolean"))
+      .otherwise(lhs >= rhs)
+
+  /** Long output cast that cannot silently null on overflow: under
+    * ANSI the cast itself throws; with ANSI off a non-null decimal
+    * casting to null long means overflow and raises.
+    */
+  private def cosineLongExact(c: Column, what: String, opName: String): Column =
+    when(c.isNotNull && c.cast("long").isNull,
+      raise_error(lit(s"$opName: $what exceeds Long range — the " +
+        "exact-compare domain was exceeded; chunk or cap documents first"))
+        .cast("long"))
+      .otherwise(c.cast("long"))
+
+  /** The prefix length of a document for the exact cosine bound:
+    * `ws` are its weights in global rarest-first order, `nrm` its
+    * squared norm. It is the shortest head whose remaining squared
+    * mass `tail` satisfies `tail·q² < p²·nrm`, i.e. whose head mass
+    * `h` satisfies `h·q² > nrm·(q² − p²)`; the whole doc when none
+    * does (p = 0). Compared in DECIMAL(38,0) like
+    * [[cosineThresholdFilter]], in one pass with running state (h, k):
+    * a per-position tail sum would be O(n²) per doc. Soundness is in
+    * [[lexicalCosinePairs]]' scale note.
+    */
+  private def cosinePrefixLen(
+      ws: Column, nrm: Column, minCosNum: Int, minCosDen: Int): Column = {
+    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
+    val q2 = minCosDen.toLong * minCosDen
+    val bound = nrm.cast(dec) * lit(q2 - minCosNum.toLong * minCosNum)
+    aggregate(ws, struct(lit(0).cast(dec).as("h"), lit(0).as("k")),
+      (s, x) => when(s("h") * lit(q2) > bound, s)
+        .otherwise(struct((s("h") + x.cast(dec) * x).as("h"), (s("k") + 1).as("k"))),
+      s => s("k"))
+  }
+
   /** TF-IDF-weighted lexical cosine similarity join: all unordered
     * document pairs whose weighted-term cosine clears
     * `minCosNum / minCosDen` — the third classic text-similarity
@@ -502,78 +599,29 @@ object TextAnalysis {
     * pre-normalize whitespace (or run [[adaptiveRetokenize]]) for
     * tab/newline-separated corpora.
     *
-    * Scale shape: one tokenize + two bounded aggregates build the
-    * weighted postings (persistOnce — three consumers, one
-    * computation); the pair numerators come from the term-bucketed
-    * self-join, whose fan-out is Σ_t df(t)² — inherent to EXACT
-    * all-pairs similarity. At corpus scale, restrict the candidate
-    * universe first (a partition, a near-dup bucket, a top-k shortlist
-    * from the ANN/BM25 indexes) and run the exact measure inside it;
-    * an unrestricted 100 TB all-pairs cosine is a quadratic ask no
-    * engine honors.
+    * Scale shape: one tokenize feeds one exchange by term, which
+    * serves both the (doc, term) count and the df window, so the
+    * tokens are written once. One persisted row per doc then serves
+    * every consumer: its terms and weights in the global rarest-first
+    * order `(df, term)`, its norm and its prefix ([[cosinePrefixLen]]).
+    * N joins those per-doc rows, not the postings, so its count runs
+    * beside the postings' stages. The bound is exact (Cauchy–Schwarz,
+    * no estimate): the prefix is the shortest head whose remaining
+    * squared mass `tail` satisfies `tail·q² < p²·‖x‖²`; if the first
+    * term a pair shares lay past x's prefix, then
+    * `cos ≤ ‖x_tail‖/‖x‖ < p/q`. So every pair that clears the
+    * threshold shares a term inside both prefixes, and only prefix ⋈
+    * prefix pairs form, each once, at the first prefix term they
+    * share. The join's fan-out is Σ_t dfₚ(t)² over prefix postings
+    * (each doc's rarest terms), not the Σ_t df(t)² of all postings.
+    * Each candidate's numerator is the exact dot product of the two
+    * full weight maps, with no pair aggregate. At p = 0 the prefix is
+    * the whole doc, and the candidates are every pair sharing a term,
+    * the same rows as an all-pairs join. At corpus scale, restrict the
+    * candidate universe first (a partition, a near-dup bucket, a top-k
+    * shortlist from the ANN/BM25 indexes) and run the exact measure
+    * inside it.
     */
-  /** The milli-unit idf quantization both cosine forms share — one
-    * definition so the exact-rational contract cannot drift between
-    * the all-pairs and the index-backed paths (or their twins).
-    */
-  private def cosineIdfFx(dfCol: Column, nCol: Column): Column =
-    floor(log((nCol + 1).cast("double") / (dfCol + 1).cast("double"))
-      * lit(1000.0) + lit(0.5)).cast("long")
-
-  /** Exact Σ(a·b) over fixed-point longs for the PER-CALL cosine
-    * aggregates (numerator and batch/pairs norms). Under ANSI — this
-    * build's session default — the accumulation stays in primitive
-    * LONG: identical values inside the documented exact-compare domain
-    * (the outputs are long via [[cosineLongExact]] anyway, so a sum
-    * past ~9.2e18 was ALREADY a refusal), and overflow still fails
-    * loudly (Spark raises ARITHMETIC_OVERFLOW on the sum or the
-    * product). The DECIMAL(38,0) accumulation survives only for
-    * ANSI-off sessions, where a long sum would wrap silently — there
-    * the decimal-null loudness contract ([[cosineThresholdFilter]],
-    * [[cosineLongExact]]) still catches it. Why: Decimal(38,0) partial
-    * sums allocate and box on every row, and the numerator aggregate
-    * processes |batch terms ∩ doc terms| rows per (batch, history)
-    * pair — the suite's single hottest aggregate ran entirely in
-    * decimal for values that fit a long. (The STORED norms sidecar is
-    * untouched: its on-disk decimal schema is a persisted format.)
-    */
-  // BUILD-TIME BINDING, by design: the branch reads the calling
-  // thread's session conf when the plan is CONSTRUCTED (every cosine
-  // entry point builds its plan per call, so build==execute session in
-  // this codebase). A caller that builds a frame, flips
-  // spark.sql.ansi.enabled OFF, and only then executes it keeps the
-  // primitive long sum — and with it ANSI's loud-overflow guarantee
-  // GONE (a wrap would be silent). Don't hold cosine frames across an
-  // ANSI toggle; rebuild them.
-  private def fxMulSum(a: Column, b: Column): Column =
-    if (org.apache.spark.sql.internal.SQLConf.get.ansiEnabled) sum(a * b)
-    else sum(a.cast(org.apache.spark.sql.types.DecimalType(38, 0)) * b)
-
-  /** The shared loud-overflow threshold filter: under ANSI (this
-    * build's default) decimal overflow throws before any null exists;
-    * with ANSI off a null product means overflow and must raise, not
-    * silently drop the pair.
-    */
-  private def cosineThresholdFilter(
-      lhs: Column, rhs: Column, opName: String): Column =
-    when(lhs.isNull || rhs.isNull,
-      raise_error(lit(s"$opName: fixed-point overflow — a document's " +
-        "weight mass exceeds the exact-compare domain " +
-        "(Σ(tf·idf_fx)² ≲ 1e19); chunk or cap documents first"))
-        .cast("boolean"))
-      .otherwise(lhs >= rhs)
-
-  /** Long output cast that cannot silently null on overflow: under
-    * ANSI the cast itself throws; with ANSI off a non-null decimal
-    * casting to null long means overflow and raises.
-    */
-  private def cosineLongExact(c: Column, what: String, opName: String): Column =
-    when(c.isNotNull && c.cast("long").isNull,
-      raise_error(lit(s"$opName: $what exceeds Long range — the " +
-        "exact-compare domain was exceeded; chunk or cap documents first"))
-        .cast("long"))
-      .otherwise(c.cast("long"))
-
   def lexicalCosinePairs(
       df: DataFrame,
       idCol: String,
@@ -587,32 +635,50 @@ object TextAnalysis {
     val toks = df
       .select(col(idCol).as("doc_id"), explode(split(col(textCol), " ")).as("term"))
       .filter(length(col("term")) > 0)
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val nDocs = df.agg(countDistinct(col(idCol)).as("n_docs"))
+    // one exchange, by term, serves both the tf aggregate and the df
+    // window
+    val postings = toks.repartition(col("term"))
+      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
+      .withColumn("df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("term")))
+    // N joins the per-doc rows, not the postings: its count then runs
+    // beside the postings' stages instead of holding them up
+    val weighted = transform(col("v"), t => struct(t("term").as("term"),
+      (t("tf") * cosineIdfFx(t("df"), col("n_docs"))).as("w")))
     // pinned like the minhash signature frames: repeated structurally
     // identical calls share one entry; loop callers release between
     // epochs via their cache-clear cadence (the CorpusIngest rule)
-    val w = org.apache.spark.sql.graftbridge.CacheBridge.persistOnce(
-      tf.join(dfreq, Seq("term"))
+    val docs = org.apache.spark.sql.graftbridge.CacheBridge.persistOnce(
+      postings.groupBy("doc_id")
+        .agg(sort_array(collect_list(struct(col("df"), col("term"), col("tf")))).as("v"))
         .crossJoin(broadcast(nDocs))
-        .withColumn("w", col("tf") * cosineIdfFx(col("df"), col("n_docs")))
-        .filter(col("w") > 0)
-        .select("doc_id", "term", "w"),
+        .select(col("doc_id"), filter(weighted, t => t("w") > 0).as("v"))
+        .select(col("doc_id"), col("v.term").as("terms"), col("v.w").as("ws"))
+        .withColumn("nrm", fxArraySum(col("ws"), x => fxMul(x, x)))
+        .select(col("doc_id"), col("nrm"),
+          slice(col("terms"), lit(1),
+            cosinePrefixLen(col("ws"), col("nrm"), minCosNum, minCosDen)).as("pre"),
+          map_from_arrays(col("terms"), col("ws")).as("wv")),
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val norms = w.groupBy("doc_id")
-      .agg(fxMulSum(col("w"), col("w")).as("nrm"))
-    val num = w.select(col("doc_id").as("id_a"), col("term"), col("w").as("w_a"))
-      .join(w.select(col("doc_id").as("id_b"), col("term"), col("w").as("w_b")),
-        Seq("term"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(fxMulSum(col("w_a"), col("w_b")).as("num"))
+      // a null norm is an ANSI-off overflow: refuse it for every doc, not
+      // only for the docs that reach a candidate pair (read off the cache,
+      // so the filter does not re-derive the norm)
+      .filter(cosineThresholdFilter(col("nrm"), lit(0), "lexicalCosinePairs"))
+    def side(s: String) = docs.select(explode(col("pre")).as("term"),
+      col("doc_id").as(s"id_$s"), col("nrm").as(s"norm_$s"),
+      col("wv").as(s"wv_$s"), col("pre").as(s"pre_$s"))
     val lhs = col("num").cast(dec) * col("num") * lit(minCosDen.toLong * minCosDen)
     val rhs = col("norm_a").cast(dec) * col("norm_b") * lit(minCosNum.toLong * minCosNum)
-    num
-      .join(norms.select(col("doc_id").as("id_a"), col("nrm").as("norm_a")), "id_a")
-      .join(norms.select(col("doc_id").as("id_b"), col("nrm").as("norm_b")), "id_b")
+    side("a").join(side("b"), Seq("term"))
+      .filter(col("id_a") < col("id_b"))
+      // each pair once, at the first term (in the global order) that
+      // its two prefixes share
+      .filter(element_at(array_intersect(col("pre_a"), col("pre_b")), 1) === col("term"))
+      .withColumn("num", fxArraySum(
+        map_values(map_zip_with(col("wv_a"), col("wv_b"), (_, x, y) => fxMul(x, y))),
+        // a term of only one doc zips to null
+        v => coalesce(v, lit(0))))
       .filter(cosineThresholdFilter(lhs, rhs, "lexicalCosinePairs"))
       .select(col("id_a"), col("id_b"),
         cosineLongExact(col("num"), "num", "lexicalCosinePairs").as("num_fx"),

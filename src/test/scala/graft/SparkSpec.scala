@@ -13,8 +13,7 @@ object TestSession {
       .config("spark.sql.shuffle.partitions", "4")
       // static conf: must be set before session creation (bucketed-table
       // specs write through the catalog)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", GraftSession.throwawayDir("graft_wh"))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

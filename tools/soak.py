@@ -18,10 +18,11 @@ over the hot tail, and writes:
   - bench/SOAK_DETAIL.md  the full table: absolute times both scales,
                           ratio, load averages, verdict per query.
 
-Interpretation: data grows 10x, cores are fixed at 32, so perfectly
-linear work lands at ratio <= ~10 once per-query fixed overhead
-(planning, JIT, small-stage scheduling) is amortized; sub-10 ratios mean
-the sf0.1 time was overhead-dominated. A ratio well above ~12 flags
+Interpretation: data grows 10x, cores are fixed (SPARK_GRAFT_CPUS, else
+every processor the JVM sees), so perfectly linear work lands at ratio
+<= ~10 once per-query fixed overhead (planning, JIT, small-stage
+scheduling) is amortized; sub-10 ratios mean the sf0.1 time was
+overhead-dominated. A ratio well above ~12 flags
 super-linear work — the thing the soak exists to catch.
 
 Usage: python3 tools/soak.py [--sf1dir target/sf1] [--sf03dir target/sf03]
@@ -112,7 +113,8 @@ ADD_OPENS = [f"--add-opens={p}=ALL-UNNAMED" for p in [
 def run_bench(sf_dir: str, reps: int, only=None) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = sf_dir
-    env["SPARK_GRAFT_CPUS"] = env.get("SPARK_GRAFT_CPUS", "32")
+    # SPARK_GRAFT_CPUS passes through as set: unset, the bench's session
+    # takes every processor the JVM sees, and its params report the width
     env["SPARK_GRAFT_BENCH_REPS"] = str(reps)
     env["SPARK_GRAFT_ONLY"] = "^(" + "|".join(only or HEAVY) + ")$"
     # the stdout blob trims its fastest entries to fit the driver's
@@ -343,7 +345,7 @@ def main():
     with open(os.path.join(REPO, "bench/SOAK_DETAIL.md"), "w") as f:
         f.write(
             "# sf0.1 -> sf1 (10x) scale soak\n\n"
-            f"reps={args.reps} (median), cpus={os.environ.get('SPARK_GRAFT_CPUS', '32')}, "
+            f"reps={args.reps} (median), cpus={base['params'].get('cpus', '?')}, "
             f"load sf0.1={base['params']['load']}, load sf1={big['params']['load']}, "
             f"wall={wall:.0f}s\n\n"
             "Linear work on fixed cores lands at <= ~10x once per-query fixed\n"
